@@ -12,100 +12,110 @@ import org.apache.spark.sql.SparkSession
   * lose all per-query numbers to an rc=124 (BENCH_r03 failure mode).
   * Consumers should take the LAST matching line.
   *
-  * Pass policy (r4, after BENCH_r03 blew the driver wall-clock budget;
-  * streaming revised r5):
+  * Pass policy (fixed; no prior file is read):
   *   - streaming-sink queries (`*_stream`): TWO timed passes, min.
-  *     r4 assumed their cost was pure engine overhead and ran one pass;
-  *     measured r5, the FIRST streaming invocation in a JVM pays
-  *     ~1.5-1.7 s of micro-batch-planner/state-store/sink JIT on top
-  *     (3.6 s vs 1.95 s steady for the dedup stream), so a single pass
-  *     systematically overstates the first stream queries. Two passes
-  *     add ~10 s wall against the 1500 s budget.
+  *     The FIRST streaming invocation in a JVM pays ~1.5-1.7 s of
+  *     micro-batch-planner/state-store/sink JIT on top (measured r5:
+  *     3.6 s vs 1.95 s steady for the dedup stream), so a single pass
+  *     systematically overstates the first stream queries.
   *   - batch queries: one warmup pass (JIT + whole-stage-codegen
   *     compilation dominate cold runs) whose time is FOLDED into the
   *     min as a free extra sample, then a first timed pass. If the
   *     first timed pass exceeds [[SlowPassSec]], one more timed pass
-  *     runs — min of 3 samples total ("slow-3pass"); a single pass
-  *     proved storm-prone (BENCH r4 dev: ann_topk_ivf_kmeans measured
-  *     24.7 s on a deopt-storm pass vs 2.7 s steady state), while
-  *     capping bounds the wall cost of slow queries. Fast queries run
-  *     two more passes — min of 4 samples ("min-of-4"; code-cache
-  *     flush/deopt storms on this box can contaminate a whole pass; see
-  *     build.sbt javaOptions).
-  *   - STORM ESCAPE (r6, made adaptive r7): the previous round's
-  *     committed BENCH_LOCAL.json serves as a per-query prior. A fresh
-  *     min that exceeds [[PriorStormFactor]] × its prior is a
-  *     deopt-storm suspect (r5: the driver read untouched queries up
-  *     to 7× high — `rel_stats_summary` 3.15 s vs 0.48 s steady), so
-  *     extra passes keep running until the min drops inside the factor
-  *     OR the query's total wall time crosses [[StormWallCapSec]] —
-  *     the r6 fixed 2-extra-pass cap gave up while storms were still
-  *     hot (7 of 118 driver values landed >2× their committed
-  *     steady-state, `dedup_report` 6.8×). A real regression still
-  *     surfaces: it burns the cap once and keeps its (consistent)
-  *     elevated min. The artifact additionally records
-  *     `storm_ratio` = achieved-min / prior for every query with a
-  *     prior, so a consumer can separate residual storm (ratio high,
-  *     code untouched) from regression (ratio high, code changed)
-  *     mechanically. Cells whose escape cap runs out while still
-  *     outside the factor ship in an `unescaped` array (r14 — the r13
-  *     persistent-storm family was only findable by joining against
-  *     the prior file) and get ONE suite-end revisit pass; those the
-  *     revisit brings back inside the factor move to
-  *     `revisit_cleared` (transient after all), the rest stay listed
-  *     with a twice-sampled elevated min (regression suspects) —
-  *     unless the wall budget starved their revisit, in which case
-  *     they appear in `revisit_pending` (once-sampled; weaker
-  *     evidence). Cells above [[WatchNormFactor]] × the
-  *     suite-median-normalized ratio that carry NO marker in those
-  *     three arrays ship in a derived `watch` array (r16 — r15's
-  *     `ann_prototype_classify` landed at 2.970× prior, 0.001 under
-  *     the trigger, with no marker at all; r17 widened eligibility to
-  *     tripped-then-escaped cells, whose `+stormN` adjudication goes
-  *     only to stderr — ADVICE r16).
-  *     The compact stdout line caps each array at 8 names
-  *     and always carries `*_total` counts (a mass-storm run must not
-  *     push the bounded-tail line past parseability); the full file
-  *     line is uncapped.
-  *     Every line also carries environment telemetry (`sibling_jvms`,
-  *     `load_avg`, `suite_median_storm`, `boot_id`) plus the PRIOR
-  *     file's own provenance (`prior_load_avg`, `prior_boot_id`, when
-  *     it carries them), so a ratio consumer sees both endpoints'
-  *     environments without git archaeology.
+  *     runs — min of 3 samples total ("slow-3pass"), which bounds the
+  *     wall cost of slow queries. Fast queries run two more passes —
+  *     min of 4 samples ("min-of-4").
   *   - a global wall budget (SPARK_GRAFT_BENCH_BUDGET_SEC, default
   *     1500 s) degrades the policy to single-pass-no-warmup once
   *     exceeded, so the tail of the suite still produces numbers.
+  * A failed pass reads −1; a cell whose passes all fail ships −1 and
+  * is named in the `failed` array of both artifact lines (see
+  * [[artifactLines]]), never counted in `total` or `queries_done`.
   * Per-query wall time goes to stderr as it happens, so any future
   * stall is attributable to a specific query.
   */
 object Bench {
   private val SlowPassSec = 5.0
-  private val PriorStormFactor = 3.0
-  /** Per-query wall cap for adaptive storm-escape passes (seconds). */
-  private val StormWallCapSec = 20.0
-  /** `watch` threshold (VERDICT r15 item 2): a cell whose
-    * suite-median-normalized storm ratio exceeds this while carrying
-    * no marker in the `unescaped`/`revisit_cleared`/`revisit_pending`
-    * arrays is a cliff-edge cell — r15 shipped
-    * `ann_prototype_classify` at 2.970× prior, 0.001 under the
-    * [[PriorStormFactor]] trigger, findable only via a prior-file
-    * join; a cell that TRIPS the escape but recovers under the factor
-    * is in the same no-marker boat (its `+stormN` mode goes only to
-    * stderr — ADVICE r16), so it is watch-eligible too. Watch cells
-    * are named in both artifact lines (capped at 8 names +
-    * `watch_total` in the compact line, like the escape arrays);
-    * derivation in [[BenchPriors.watchCells]]. */
-  private val WatchNormFactor = 2.0
+  /** Name-array cap in the compact stdout line (the full line is
+    * uncapped; `failed_total` always carries the real count). */
+  val CompactCap = 8
+
+  /** Run-constant fields of every artifact line: host shape and
+    * contamination telemetry, measured once at startup. */
+  final case class Env(
+      sfDir: String,
+      fullArtifact: String,
+      siblingJvms: Int,
+      loadAvg: Double,
+      cpus: Int,
+      memTotalGb: Double,
+      referenceCorpusWords: Option[Long])
+
+  private def fmt(v: Double): String = // 4dp: 0.1 ms grain, keeps lines short
+    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The (compact stdout line, full file line) pair over the cells
+    * finished so far, in run order. A negative value is a failed cell:
+    * it stays in the full line's `queries` map as −1, is named in
+    * `failed` (capped at [[CompactCap]] names in the compact line), and
+    * counts toward `failed_total` — never toward `total` or
+    * `queries_done`, so a failure cannot make the suite look faster. */
+  def artifactLines(results: collection.Map[String, Double],
+      env: Env): (String, String) = {
+    def cells(kv: Iterable[(String, Double)]): String =
+      kv.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
+    def names(s: Iterable[String]): String =
+      s.map(n => s""""$n"""").mkString("[", ",", "]")
+    val ok = results.filter(_._2 >= 0)
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val total = ok.valuesIterator.sum
+    def counts(cap: Int): String =
+      s""""queries_done":${ok.size},"failed":${names(failed.take(cap))},""" +
+        s""""failed_total":${failed.size}"""
+    // omitted, not fabricated, when the corpus was unreadable (the two
+    // reference cells then ship −1 and are named in `failed`)
+    val corpusField = env.referenceCorpusWords
+      .map(n => s""","reference_corpus_words":$n""").getOrElse("")
+    val envFields =
+      s""""sibling_jvms":${env.siblingJvms},"load_avg":${fmt(env.loadAvg)},""" +
+        s""""cpus":${env.cpus},"mem_total_gb":${fmt(env.memTotalGb)}$corpusField"""
+    val full =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${cells(results)},""" +
+        s"""${counts(Int.MaxValue)},$envFields,"sf":"${env.sfDir}"}"""
+    // stdout carries a COMPACT line (<2 KB) instead of the full one: the
+    // driver keeps only a bounded TAIL of stdout, and the full cumulative
+    // line (>7 KB at 258 queries) was front-truncated past parseability
+    // three rounds running (BENCH_r8-r10 `parsed: null`). Totals +
+    // worst-10 + the reference's headline pipeline always fit; the full
+    // per-query map lives in the file named by `full_artifact`.
+    val worst = ok.toSeq.sortBy(-_._2).take(10)
+    val headliners = Seq("bigram_probs", "bigram_probs_onlyone",
+      "bigram_counts", "trigram_counts", "word_topk")
+      .flatMap(n => results.get(n).map(n -> _))
+    val compact =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${cells((worst ++ headliners).distinct)},""" +
+        s"""${counts(CompactCap)},$envFields,"full_artifact":"${env.fullArtifact}","sf":"${env.sfDir}"}"""
+    (compact, full)
+  }
+
+  /** MemTotal from /proc/meminfo in GiB, or −1 where unreadable. */
+  private def memTotalGb(): Double = try {
+    val src = scala.io.Source.fromFile("/proc/meminfo")
+    try src.getLines().find(_.startsWith("MemTotal:"))
+      .map(_.split("\\s+")(1).toDouble / (1024 * 1024)).getOrElse(-1.0)
+    finally src.close()
+  } catch { case _: Exception => -1.0 }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(Tables.NanosConf, "true")
@@ -123,8 +133,7 @@ object Bench {
     // NOT kill this forked JVM — measured r12, it ORPHANS with a broken
     // stdout pipe and keeps running, so no hook fires at the cut point;
     // see the shutdown-hook block below).
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_LOGLEVEL", "ERROR"))
+    spark.sparkContext.setLogLevel("ERROR")
 
     // Same-data baseline rows (VERDICT r14 item 4): the bigram pipeline
     // over the ACTUAL reference corpus /root/reference/354984si.ngl —
@@ -151,11 +160,9 @@ object Bench {
     // flattering number. The artifact therefore carries the corpus's
     // own word count as `reference_corpus_words` next to the cells
     // (ReferenceCorpusSpec pins the same count against the same env
-    // default); omitted, not fabricated, when the corpus is unreadable
-    // (the two cells then ship -1 from runOnce's failure path anyway).
+    // default).
     val refCorpusWords: Option[Long] =
-      try Some(sources.WordListSource
-        .read(spark, refCorpus, referenceQuirk = true).count())
+      try Some(refWords().count())
       catch {
         case e: Exception =>
           System.err.println(
@@ -185,45 +192,6 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val streaming = names.filter(_.endsWith("_stream")).toSet
-    // Per-query priors from the previous round's committed artifact —
-    // read BEFORE the first emit() overwrites the same file. Parsing
-    // lives in [[BenchPriors]] (whitespace-tolerant, unit-tested
-    // against the committed file itself) after the r12 break: an
-    // exact-format in-line parser met a Python-styled re-pin and
-    // silently loaded zero priors, de-arming the storm escape for the
-    // whole driver sweep.
-    val priorFile =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_LOCAL.json")
-    // ONE read serves both the prior map and the provenance fields
-    // below (a separate load() + readString pair re-read the file and
-    // opened a change-between-reads window); None = unreadable/absent,
-    // which keeps load()'s warn contract: warn only when the file
-    // EXISTS but yields zero priors (the r12 silent-de-arm mode).
-    val priorText: Option[String] =
-      try Some(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(priorFile)))
-      catch { case _: Exception => None }
-    val prior: Map[String, Double] =
-      priorText.map(BenchPriors.parse).getOrElse(Map.empty)
-    if (priorText.isDefined && prior.isEmpty)
-      System.err.println(s"[bench] WARNING: prior file $priorFile exists " +
-        "but yielded zero priors (format drift?) - adaptive storm escape " +
-        "is DISABLED")
-    // Prior PROVENANCE (VERDICT r13 item 5): a storm_ratio consumer
-    // needs both endpoints' environments — the r13 adjudication had to
-    // dig the prior's load out of git history to conclude the 14-cell
-    // storm family was host contention, not regression. The prior
-    // file's own telemetry (when it carries any) rides along in every
-    // emitted line as prior_load_avg / prior_boot_id.
-    val priorLoadAvg: Option[Double] =
-      priorText.flatMap(BenchPriors.numField(_, "load_avg"))
-    // Sanitized before interpolation into the artifact JSON: the run's
-    // own boot_id comes from /proc (hex + dashes, safe), but the
-    // PRIOR's is external input (ADVICE r14) — see
-    // [[BenchPriors.sanitizeId]], which BenchPriorsSpec pins.
-    val priorBootId: Option[String] =
-      priorText.flatMap(BenchPriors.strField(_, "boot_id"))
-        .map(BenchPriors.sanitizeId)
     val benchStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
 
@@ -231,12 +199,11 @@ object Bench {
     // Two measured contamination modes move timings without touching
     // code: an ORPHANED sibling JVM from a killed sbt run (74/258
     // queries 1.3-1.9x high, uniformly) and general host load. The
-    // orphan pre-flight lived only in the verify skill, which the
-    // driver never reads — so the artifact itself now records both at
-    // startup. A sibling is any OTHER java process whose command line
-    // mentions this repo's code ("graft" — the forked classpath and
-    // the sbt runMain args both carry it), excluding this process and
-    // its ancestor chain (the parent sbt's own args say "graft.Bench").
+    // artifact itself records both at startup, next to the host shape.
+    // A sibling is any OTHER java process whose command line mentions
+    // this repo's code ("graft" — the forked classpath and the sbt
+    // runMain args both carry it), excluding this process and its
+    // ancestor chain (the parent sbt's own args say "graft.Bench").
     val siblingJvms: Int = try {
       val self = ProcessHandle.current()
       val ancestors = Iterator.iterate(Option(self))(
@@ -257,30 +224,20 @@ object Bench {
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Exception => -1.0 }
-    // The kernel boot UUID makes "same boot as the prior?" mechanical
-    // (the committed-prior discipline is two SAME-boot sweeps, and the
-    // first sweep after a boot reads ~8% high — verify/SKILL.md):
-    // artifact carries its own boot_id; prior_boot_id above carries the
-    // prior's, so a consumer compares without git archaeology.
-    val bootId: String = try
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id")).trim
-    catch { case _: Exception => "unknown" }
     if (siblingJvms > 0)
       System.err.println(s"[bench] WARNING: $siblingJvms sibling graft " +
         s"JVM(s) detected at startup (load_avg=$loadAvg) - timings may " +
         "be contention-contaminated")
 
     // Whole-suite codegen/JIT pre-warm at a tiny sf (r8, VERDICT r7 item
-    // 2): the r7 storm tail — 10/226 driver values >2× their steady
-    // prior with the 20 s escape cap exhausted — came from queries whose
-    // FIRST sf0.1 executions still carried Janino compilation + C2
-    // warmup + code-cache churn from neighbors. One untimed sweep at
-    // sf0.001 compiles every query's generated classes up front
-    // (~100-150 s against the 1500 s budget), so the timed loop starts
-    // JIT-hot for the whole suite, not just the query at hand. Disable
-    // with SPARK_GRAFT_BENCH_WARM_DIR="" (and it auto-skips once the
-    // sweep has eaten a quarter of the budget).
+    // 2): queries whose FIRST sf0.1 executions still carried Janino
+    // compilation + C2 warmup + code-cache churn from neighbors read
+    // >2× their steady state. One untimed sweep at sf0.001 compiles
+    // every query's generated classes up front (~100-150 s against the
+    // 1500 s budget), so the timed loop starts JIT-hot for the whole
+    // suite, not just the query at hand. Disable with
+    // SPARK_GRAFT_BENCH_WARM_DIR="" (and it auto-skips once the sweep
+    // has eaten a quarter of the budget).
     val warmDir =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_DIR", "/root/testdata/sf0.001")
     if (warmDir.nonEmpty) {
@@ -288,12 +245,14 @@ object Bench {
       val warmCap = budgetSec / 4
       // Parallel: a serial sweep measured >360 s cold (each query pays
       // its own Janino compile + planner warmup serially on the driver
-      // thread) — compilation is per-thread work, so an 8-way pool
-      // overlaps it. Streaming sinks are excluded: their cost is
-      // micro-batch engine overhead, not codegen, and their own 2-pass
-      // policy already absorbs the first-stream tax. No clearCache()
-      // inside the sweep (racy across threads); one clear at the end.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      // thread) — compilation is per-thread work, so a pool overlaps it,
+      // sized to the run's cores (at most 8). Streaming sinks are
+      // excluded: their cost is micro-batch engine overhead, not
+      // codegen, and their own 2-pass policy already absorbs the
+      // first-stream tax. No clearCache() inside the sweep (racy across
+      // threads); one clear at the end.
+      val pool =
+        java.util.concurrent.Executors.newFixedThreadPool(math.min(8, cpus))
       val warmed = new java.util.concurrent.atomic.AtomicInteger
       val batch = names.filterNot(streaming)
       for (name <- batch) pool.execute { () =>
@@ -326,62 +285,17 @@ object Bench {
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // achieved-min / prior per query (only where a prior exists): the
-    // mechanical storm-vs-regression signal the artifact ships (r7)
-    val stormRatio = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // Cells whose adaptive storm escape exhausted [[StormWallCapSec]]
-    // with best still > PriorStormFactor x prior (VERDICT r13 item 2):
-    // the r13 driver sweep hit a PERSISTENT deopt-storm family
-    // (rel_salted_agg 15.4x et al.) that the 20 s cap cannot rescue,
-    // and the artifact shipped the elevated mins with no marker — a
-    // consumer had to join against the prior file to find them. Now
-    // both artifact lines carry `"unescaped":[...]` (storms the escape
-    // could not clear) and `"revisit_cleared":[...]` (unescaped cells
-    // whose ONE suite-end revisit pass came back inside the factor —
-    // persistent storms sometimes clear after the code cache churns
-    // through the rest of the suite, and whether they do is now
-    // measured, not conjectured).
-    val unescaped = scala.collection.mutable.LinkedHashSet[String]()
-    val revisitCleared = scala.collection.mutable.LinkedHashSet[String]()
-    // unescaped cells whose suite-end revisit was SKIPPED by the wall
-    // budget: a still-listed cell is only a "twice-sampled regression
-    // suspect" if its revisit actually ran — a budget-starved sweep
-    // must say so, not imply extra sampling that never happened.
-    // Populated when the revisit phase starts (names drain as each
-    // revisit completes), so it is meaningful in the FINAL line; a
-    // capture cut before the revisit phase shows it empty alongside a
-    // non-empty `unescaped`, which simply means the phase hadn't
-    // started.
-    val revisitPending = scala.collection.mutable.LinkedHashSet[String]()
-    // Only cells named in the three escape arrays above are excluded
-    // from the derived `watch` array — THEY carry their own in-artifact
-    // adjudication. Tripping the escape alone does not exclude (ADVICE
-    // r16): a cell that tripped and then recovered to e.g. 2.9x prior
-    // records its `+stormN` mode only on stderr, so without a watch
-    // marker it would ship exactly the r15 cliff-edge gap watch was
-    // built to close.
-    val adjudicated = (n: String) =>
-      unescaped.contains(n) || revisitCleared.contains(n) ||
-        revisitPending.contains(n)
     // Self-contained artifact (VERDICT r4 item 3): the driver's log
     // capture keeps only a tail, which front-truncates the (>2000 char)
-    // final cumulative line — so the SAME line is also rewritten to a
+    // final cumulative line — so the full line is also rewritten to a
     // file after every query: always one complete, parseable JSON
     // object regardless of how the stdout capture was sliced, and
     // timeout-proof (any prefix of the run leaves the last
     // fully-written file state).
-    // The default is BENCH_LIVE.json, NOT the prior file (r15): for
-    // eleven rounds the live output defaulted onto BENCH_LOCAL.json —
-    // the very file the storm escape reads its priors from — so every
-    // live run replaced the committed clean prior in the working tree,
-    // and twice a round boundary then committed the contaminated copy
-    // (r13: load_avg 6.89; r14: 4.37). Splitting input from output
-    // removes the failure structurally: the prior now changes ONLY via
-    // a deliberate tools/repin_bench_local.py run (which refuses
-    // contended sweeps), and PriorHygieneSpec keeps asserting the
-    // committed prior's telemetry as defense in depth.
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LIVE.json"))
+    val env = Env(sfDir, outFile.getFileName.toString, siblingJvms, loadAvg,
+      Runtime.getRuntime.availableProcessors, memTotalGb(), refCorpusWords)
     // The LAST stdout line of the whole process must be the compact
     // JSON artifact line (the consumer's take-the-last-line protocol;
     // see build.sbt's outputStrategy/showSuccess notes). A shutdown
@@ -416,93 +330,7 @@ object Bench {
         }
       }, 1)
     def emit(): Unit = {
-      def fmt(v: Double): String = // 4dp: 0.1 ms grain, keeps lines short
-        BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-      val qs = results.map { case (k, v) => s""""$k":${fmt(v)}""" }
-        .mkString("{", ",", "}")
-      val sr = stormRatio.map { case (k, v) =>
-        s""""$k":${BigDecimal(v).setScale(3,
-          BigDecimal.RoundingMode.HALF_UP)}"""
-      }.mkString("{", ",", "}")
-      val total = results.valuesIterator.filter(_ >= 0).sum
-      // suite-median storm ratio = the compare_bench.py boot lens,
-      // carried IN the artifact (VERDICT r12 item 2): a uniform
-      // cross-boot host shift lifts the MEDIAN while a regression or
-      // deopt storm moves few queries a lot, so a consumer can separate
-      // the two without the prior file in hand
-      val medianStorm = {
-        val v = stormRatio.values.toIndexedSeq.sorted
-        if (v.isEmpty) 0.0
-        else if (v.size % 2 == 1) v(v.size / 2)
-        else (v(v.size / 2 - 1) + v(v.size / 2)) / 2.0
-      }
-      // cliff-edge cells (VERDICT r15 item 2, widened ADVICE r17):
-      // above WatchNormFactor x the suite median and not already named
-      // in unescaped/revisit_cleared/revisit_pending — a cell that
-      // tripped the escape but recovered IS watch-eligible; only a
-      // cell carrying one of those JSON markers is excluded. Derived
-      // fresh per emit since both the ratios and the median grow as the
-      // suite runs; ordered worst-first so the compact cap keeps the
-      // cells most worth reading
-      val watch =
-        BenchPriors.watchCells(stormRatio, medianStorm, adjudicated,
-          WatchNormFactor)
-      // prior-provenance fields are emitted only when the prior file
-      // actually carries them (old-format priors don't) — omission,
-      // not fabrication, mirrors the re-pin tool's policy
-      val provenance =
-        priorLoadAvg.map(v => s""","prior_load_avg":${fmt(v)}""").getOrElse("") +
-          priorBootId.map(v => s""","prior_boot_id":"$v"""").getOrElse("")
-      // the corpus-swap pin field (see refCorpusWords above): omitted
-      // when the corpus was unreadable, like the prior provenance
-      val corpusField = refCorpusWords
-        .map(n => s""","reference_corpus_words":$n""").getOrElse("")
-      val envFields =
-        s""""sibling_jvms":$siblingJvms,"load_avg":${fmt(loadAvg)},""" +
-          s""""suite_median_storm":${fmt(medianStorm)},""" +
-          s""""boot_id":"$bootId"$provenance$corpusField"""
-      def names(s: Iterable[String]): String =
-        s.map(n => s""""$n"""").mkString("[", ",", "]")
-      def escFields(cap: Int): String = {
-        // the compact stdout line must stay under the driver's bounded
-        // tail (~2 KB): a mass-storm run (stale/scale-mismatched prior
-        // -> hundreds of unescaped cells) would otherwise push the
-        // arrays past it and re-break strict tail parsing — cap the
-        // compact arrays and always ship totals so truncation is
-        // detectable; the full file line is uncapped
-        def arr(s: scala.collection.Set[String]) = names(s.take(cap))
-        s""""unescaped":${arr(unescaped)},""" +
-          s""""unescaped_total":${unescaped.size},""" +
-          s""""revisit_cleared":${arr(revisitCleared)},""" +
-          s""""revisit_cleared_total":${revisitCleared.size},""" +
-          s""""revisit_pending":${arr(revisitPending)},""" +
-          s""""revisit_pending_total":${revisitPending.size},""" +
-          s""""watch":${names(watch.take(cap))},""" +
-          s""""watch_total":${watch.size}"""
-      }
-      // cumulative: every written line is a complete artifact so far
-      val line =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"storm_ratio":$sr,${escFields(Int.MaxValue)},$envFields,"sf":"$sfDir"}"""
-      // stdout carries a COMPACT line (<2 KB) instead of the full one:
-      // the driver keeps only a bounded TAIL of stdout, and the full
-      // cumulative line (>7 KB at 258 queries) was front-truncated past
-      // parseability three rounds running (BENCH_r8-r10 `parsed: null`
-      // — VERDICT r10 item 3). Totals + worst-10 + the reference's
-      // headline pipeline + max storm ratio always fit; the full
-      // per-query map lives in the live artifact file (BENCH_LIVE.json
-      // by default, named in `full_artifact`). Same
-      // take-the-LAST-line protocol.
-      val worst = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      val headliners = Seq("bigram_probs", "bigram_probs_onlyone",
-        "bigram_counts", "trigram_counts", "word_topk")
-        .flatMap(n => results.get(n).map(n -> _))
-      val compactQs = (worst ++ headliners).distinct
-        .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-      val maxStorm = stormRatio.values.foldLeft(0.0)(math.max)
-      val compact =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$compactQs,""" +
-          s""""queries_done":${results.size},"max_storm_ratio":${fmt(maxStorm)},""" +
-          s"""${escFields(8)},$envFields,"full_artifact":"${outFile.getFileName}","sf":"$sfDir"}"""
+      val (compact, line) = artifactLines(results, env)
       lastCompact.set(compact)
       println(compact)
       Console.out.flush()
@@ -548,26 +376,23 @@ object Bench {
             -1.0
         }
       results(kind) = sec
-      for (p <- prior.get(kind) if p > 0 && sec >= 0)
-        stormRatio(kind) = sec / p
       System.err.println(f"[bench] $kind%-34s best=$sec%8.3f s  (shared-build)")
       spark.catalog.clearCache()
       emit()
     }
 
-    // benchOnly rows run through the identical pass/storm policy; they
-    // are appended after the SparkEntry names (and excluded from the
-    // sf0.001 pre-warm above — they read the fixed reference corpus, so
-    // a warm-dir pass would be meaningless; their warmup pass in the
-    // batch policy covers JIT)
+    // benchOnly rows run through the identical pass policy; they are
+    // appended after the SparkEntry names (and excluded from the sf0.001
+    // pre-warm above — they read the fixed reference corpus, so a
+    // warm-dir pass would be meaningless; their warmup pass in the batch
+    // policy covers JIT)
     for (name <- names ++ benchOnly.keys.toSeq.sorted) {
       val qStart = elapsed
-      val overBudget = qStart > budgetSec
       // mode is recorded in the branch actually executed, not re-derived
       // from the resulting min (ADVICE r5: a slow-branch run whose min
       // ended below the threshold was mislabeled)
-      var (best, mode) =
-        if (overBudget) (runOnce(name), "budget-1pass")
+      val (best, mode) =
+        if (qStart > budgetSec) (runOnce(name), "budget-1pass")
         else if (streaming(name)) {
           val first = runOnce(name)
           val b = if (first < 0) first
@@ -575,10 +400,10 @@ object Bench {
           (b, "stream-2pass")
         } else {
           // the warmup is a fully-timed pass over cleared caches — folding
-          // it into the min is a free extra storm-escape sample (a deopt
-          // storm can contaminate EVERY post-warmup pass of one query:
-          // measured r5, ann_topk_lsh min-of-3 read 15.2 s vs 0.35 s
-          // steady). min() with a JIT-cold pass can only improve.
+          // it into the min is a free extra sample (a deopt storm can
+          // contaminate EVERY post-warmup pass of one query: measured r5,
+          // ann_topk_lsh min-of-3 read 15.2 s vs 0.35 s steady). min()
+          // with a JIT-cold pass can only improve.
           val warm = runOnce(name)
           val first = runOnce(name)
           if (first < 0) (first, "failed")
@@ -588,81 +413,10 @@ object Bench {
             (Seq(warm, first, runOnce(name), runOnce(name)).filter(_ >= 0).min,
               "min-of-4")
         }
-      // adaptive storm escape vs the previous round's prior (see object
-      // scaladoc): re-run while still outside the factor, up to a
-      // per-query wall cap — a still-hot storm gets as many chances as
-      // 20 s buys, a true regression burns the cap once and keeps its
-      // elevated (and by then well-sampled) min
-      val suspect = prior.get(name)
-        .exists(p => p > 0 && best > PriorStormFactor * p)
-      if (!overBudget && best >= 0 && suspect) {
-        var extra = 0
-        while (best > PriorStormFactor * prior(name) &&
-            elapsed - qStart < StormWallCapSec) {
-          val t = runOnce(name)
-          extra += 1
-          if (t >= 0 && t < best) best = t
-        }
-        mode += s"+storm$extra"
-        // cap exhausted with the min still outside the factor: a
-        // persistent storm (or a true regression) — recorded in the
-        // artifact and queued for the one suite-end revisit below
-        if (best > PriorStormFactor * prior(name)) {
-          unescaped += name
-          mode += "+unescaped"
-        }
-      }
       results(name) = best
-      for (p <- prior.get(name) if p > 0 && best >= 0)
-        stormRatio(name) = best / p
       System.err.println(
         f"[bench] $name%-34s best=$best%8.3f s  wall=${elapsed - qStart}%8.3f s  elapsed=$elapsed%8.1f s  ($mode)")
       emit()
-    }
-
-    // Suite-end REVISIT of un-escaped storm cells (VERDICT r13 item 2):
-    // the documented persistent-storm mode poisons the code cache for a
-    // stretch of the suite, but sometimes clears once the JVM has
-    // churned through the remaining queries' codegen — whether a given
-    // cell's storm was persistent-for-20s or persistent-for-the-JVM is
-    // exactly the regression-vs-environment question the consumer has
-    // to adjudicate, so it gets MEASURED: one extra pass per unescaped
-    // cell, min-folded. A cell whose revisit lands back inside the
-    // factor moves to revisit_cleared (its storm was transient after
-    // all); one that stays elevated remains in unescaped with a now
-    // twice-sampled min — the strongest regression signal this harness
-    // can produce without a code diff. Budget-guarded like everything
-    // else: a sweep already past the wall budget ships its list as-is.
-    if (unescaped.nonEmpty) {
-      // every unescaped cell starts PENDING; names drain as revisits
-      // complete, so whatever the budget leaves behind is honestly
-      // marked once-sampled (revisit_pending) instead of masquerading
-      // as a twice-sampled suspect
-      revisitPending ++= unescaped
-      System.err.println(s"[bench] revisiting ${unescaped.size} " +
-        s"un-escaped storm cell(s) at suite end: ${unescaped.mkString(", ")}")
-      for (name <- unescaped.toSeq if elapsed < budgetSec) {
-        val t = runOnce(name)
-        revisitPending -= name
-        val p = prior(name)
-        if (t >= 0 && t < results(name)) {
-          results(name) = t
-          stormRatio(name) = t / p
-        }
-        val cleared = results(name) <= PriorStormFactor * p
-        if (cleared) { unescaped -= name; revisitCleared += name }
-        System.err.println(
-          f"[bench] $name%-34s revisit=$t%8.3f s  min=${results(name)}%8.3f s  " +
-            f"(${if (cleared) "cleared - storm was transient"
-                 else "still elevated - regression suspect"})")
-        emit()
-      }
-      if (revisitPending.nonEmpty) {
-        System.err.println(s"[bench] wall budget exhausted with " +
-          s"${revisitPending.size} revisit(s) pending: " +
-          revisitPending.mkString(", "))
-        emit()
-      }
     }
     spark.stop()
   }

@@ -70,8 +70,8 @@ object Scaling {
     * sf0.1) and far below Long overflow at 16 copies. */
   val KeyShift = 10_000_000_000L
 
-  /** The measured panel: the most expensive batch queries from
-    * BENCH_LOCAL.json (streaming sinks excluded — their bounded-fixture
+  /** The measured panel: the most expensive batch queries of a Bench
+    * sweep at sf0.1 (streaming sinks excluded — their bounded-fixture
     * cost is dominated by fixed micro-batch engine overhead, which
     * scaling sf would mismeasure) plus two cheap representatives as a
     * linear-scan control group. */

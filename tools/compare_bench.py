@@ -1,25 +1,26 @@
 #!/usr/bin/env python3
-"""Boot-lens comparison of two bench artifacts.
+"""Suite-median-normalized comparison of two bench artifacts.
 
-Cross-boot host-speed variance moves the WHOLE suite by a uniform
-factor (measured r12: two idle-box sweeps on a new VM boot read a
-median 1.16x over the previous boot's committed priors, stable to
-0.04% between sweeps), while a real regression or deopt storm moves a
-FEW queries a lot. Comparing raw per-query ratios therefore flags
-dozens of phantom "regressions" after a reboot. The right lens:
+Host-speed variance (a new boot, a different machine, background load)
+moves the WHOLE suite by a roughly uniform factor (measured r12: two
+idle-box sweeps on a new VM boot read a median 1.16x over the previous
+boot's sweep), while a real regression moves a FEW queries a lot.
+Comparing raw per-query ratios therefore flags dozens of phantom
+"regressions" after a reboot. The right lens:
 
-  1. median ratio over all shared queries  = the boot/host shift
+  1. median ratio over all shared queries  = the host shift
   2. per-query ratio / median ratio        = the code signal
 
 This tool applies that lens:
 
     python3 tools/compare_bench.py OLD.json NEW.json [--threshold 1.5]
 
-Accepts Bench artifacts (BENCH_LOCAL.json, BENCH_r{N}.json with a
-top-level "queries" map, or a driver artifact whose "parsed" field
-holds one). Exit code 1 iff any query's MEDIAN-NORMALIZED ratio
-exceeds the threshold (default 1.5x) in either direction — those are
-the cells worth reading code for.
+Accepts Bench artifacts (the full BENCH_LIVE.json line, BENCH_r{N}.json
+with a top-level "queries" map, or a driver artifact whose "parsed"
+field holds one). Failed cells (-1) are left out of the ratios and
+listed. Exit code 1 iff any query's MEDIAN-NORMALIZED ratio exceeds the
+threshold (default 1.5x) in either direction — those are the cells
+worth reading code for.
 """
 import argparse
 import json
@@ -49,38 +50,11 @@ def main():
                          "artifacts (sub-100ms cells are timer noise)")
     args = ap.parse_args()
 
-    do, dn = load_doc(args.old), load_doc(args.new)
-    qo, qn = do["queries"], dn["queries"]
-    # r14 artifact self-description: cells a run's own adaptive escape
-    # could not rescue (best still >3x its prior at the 20s cap) — a
-    # flagged cell carrying this marker is a storm that run already
-    # adjudicated, not a fresh code signal to re-derive here. BOTH
-    # sides matter: an old-side unescaped cell shows up here as a
-    # phantom "improvement" when the next sweep is merely clean.
-    unescaped_new = set(dn.get("unescaped") or [])
-    unescaped_old = set(do.get("unescaped") or [])
-    # r16: cliff-edge cells the run itself named (suite-median-
-    # normalized ratio > 2 without tripping the escape) — when this
-    # tool flags the same cell, say the artifact already watched it
-    watch_new = set(dn.get("watch") or [])
-    watch_old = set(do.get("watch") or [])
-    # A driver BENCH_r{N}.json holds the compact stdout line, whose
-    # escape arrays are CAPPED at 8 names (unescaped_total carries the
-    # real count). Past the cap, flagged cells would silently lose their
-    # storm marker and read as fresh code signals — say so instead
-    # (ADVICE r14). The committed BENCH_LOCAL.json line is uncapped.
-    for side, doc, key, have in (("OLD", do, "unescaped", unescaped_old),
-                                 ("NEW", dn, "unescaped", unescaped_new),
-                                 ("OLD", do, "watch", watch_old),
-                                 ("NEW", dn, "watch", watch_new)):
-        total = doc.get(f"{key}_total")
-        if total is not None and total > len(have):
-            print(f"WARNING: {side} artifact's {key} array is "
-                  f"TRUNCATED ({len(have)} of {total} names — a compact "
-                  f"driver line caps at 8): flagged cells below may be "
-                  f"already-adjudicated storms missing their marker; "
-                  f"read the full artifact (its 'full_artifact' field) "
-                  f"before treating them as code signals")
+    qo, qn = load_doc(args.old)["queries"], load_doc(args.new)["queries"]
+    for side, q in (("OLD", qo), ("NEW", qn)):
+        failed = sorted(k for k, v in q.items() if v < 0)
+        if failed:
+            print(f"{side} failed cells ({len(failed)}): {', '.join(failed)}")
     shared = [k for k in qn
               if k in qo and max(qo[k], qn[k]) >= args.min_sec
               and min(qo[k], qn[k]) > 0]
@@ -92,29 +66,17 @@ def main():
     print(f"shared queries: {len(shared)}   "
           f"total: {sum(qo[k] for k in shared):.1f}s -> "
           f"{sum(qn[k] for k in shared):.1f}s")
-    print(f"median per-query ratio (the boot/host shift): {med:.3f}")
+    print(f"median per-query ratio (the host shift): {med:.3f}")
 
-    flagged = []
-    for k, r in ratios.items():
-        norm = r / med
-        if norm > args.threshold or norm < 1 / args.threshold:
-            flagged.append((norm, r, k))
-    flagged.sort(reverse=True)
+    flagged = sorted(((ratios[k] / med, ratios[k], k) for k in shared
+                      if not 1 / args.threshold <= ratios[k] / med
+                      <= args.threshold), reverse=True)
     if flagged:
         print(f"\n{len(flagged)} cells move past {args.threshold}x "
               f"AFTER removing the median shift (read code for these):")
         for norm, r, k in flagged:
-            mark = ""
-            if k in unescaped_new:
-                mark = "   [unescaped storm per NEW artifact]"
-            elif k in unescaped_old:
-                mark = "   [OLD side was an unescaped storm]"
-            elif k in watch_new:
-                mark = "   [NEW artifact already watch-listed this cell]"
-            elif k in watch_old:
-                mark = "   [OLD side was watch-listed]"
             print(f"  {k:38s} {qo[k]:8.3f}s -> {qn[k]:8.3f}s   "
-                  f"raw x{r:.2f}   vs-suite x{norm:.2f}{mark}")
+                  f"raw x{r:.2f}   vs-suite x{norm:.2f}")
     else:
         print(f"\nno cell moves past {args.threshold}x once the median "
               f"shift is removed: uniform host delta, no code signal")
