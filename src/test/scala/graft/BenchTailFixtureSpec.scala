@@ -29,11 +29,17 @@ class BenchTailFixtureSpec extends AnyFunSuite {
     if (g.isEmpty) 0 else g.split(",").length
   }
 
-  test("arrayNameCount distinguishes an empty capture from one name") {
+  test("arrayNameCount distinguishes an empty capture from one name " +
+      "(ADVICE r18: \"\".split(\",\") is Array(\"\"), length 1, so a " +
+      "bare split would report an empty watch array as 1 name and the " +
+      "cap assertion could not catch a regression to watch:[])") {
     assert(arrayNameCount("") === 0)
     assert(arrayNameCount("  ") === 0)
     assert(arrayNameCount(""""only_one"""") === 1)
     assert(arrayNameCount(""""a","b","c"""") === 3)
+    // a capture capped at the compact line's limit counts exactly it
+    val capped = (1 to Bench.CompactCap).map(i => s""""f$i"""").mkString(",")
+    assert(arrayNameCount(capped) === Bench.CompactCap)
   }
 
   private val fixedPolicyFixture =
@@ -41,6 +47,15 @@ class BenchTailFixtureSpec extends AnyFunSuite {
   private val fixtures = Seq(
     "tools/fixtures/bench_tail_r12_sigterm.txt", // timeout-cut capture
     "tools/fixtures/bench_tail_r12_final.txt",   // normal-exit capture
+    // real captures of the line shape Bench wrote before the fixed
+    // policy (storm-escape and watch arrays; the r18 one is a driver
+    // sweep's tail whose watch array overflowed the compact cap): the
+    // extractor must still read old artifacts, such as the old-policy
+    // sweeps in plans/pr3/
+    "tools/fixtures/bench_tail_r14_unescaped.txt",
+    "tools/fixtures/bench_tail_r16_watch.txt",
+    "tools/fixtures/bench_tail_r17_adjudicated.txt",
+    "tools/fixtures/bench_tail_r18_watchcap.txt",
     fixedPolicyFixture)
 
   for (fx <- fixtures)
