@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Character n-gram frequency pipeline — the reference's core capability
   * (`/root/reference/mapreduce.erl`), re-expressed as composable,
   * Catalyst-optimizable DataFrame operators.
@@ -23,8 +25,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB design):
   *  - Everything is built from codegen'd `org.apache.spark.sql.functions`;
-  *    no UDFs, no driver-side loops. The only values that ever reach the
-  *    driver are scalar aggregates.
+  *    no UDFs, no driver-side loops. On the docs path the only values that
+  *    reach the driver are scalar aggregates. The word-list entry points
+  *    (`*FromWords`) collect their finished result, which the `[a-z]` gate
+  *    bounds at 26² bigram rows plus the `totalCount` row (≤ 677) whatever
+  *    the input size, so both reference files are written from memory.
   *  - The grand total for probabilities is joined back as a broadcast
   *    1-row cross join — NOT an empty-frame window (which would funnel all
   *    rows through a single partition).
@@ -134,11 +139,11 @@ object TextPipeline {
     * for the reference's own newline-delimited `.ngl` corpora, where
     * there is no text column to tokenize. Same pipeline minus the
     * tokenize stage; used by the same-data baseline bench row
-    * (`bigram_reference_corpus`). */
+    * (`bigram_reference_corpus`). The result is computed here, once, and
+    * returned as a local relation (see [[materialized]]). */
   def bigramProbabilitiesFromWords(words: DataFrame): DataFrame =
-    withProbability(
-      freqTable(explodeNgrams(mainFilter(words), 2), "bigram"))
-      .orderBy("bigram")
+    materialized(withProbability(
+      freqTable(explodeNgrams(mainFilter(words), 2), "bigram")))
 
   /** `main` semantics with probabilities — the reference's full output
     * (`results.txt` + `probabilities.txt` as one sorted table). */
@@ -153,11 +158,16 @@ object TextPipeline {
     * the `totalCount` row is present in the output AND in the probability
     * denominator (SURVEY.md §2 #7/#12 divergences, kept deliberately). */
   def onlyOneProbabilities(docs: DataFrame, textCol: String = "text"): DataFrame =
-    onlyOneProbabilitiesFromWords(tokenize(docs, textCol))
+    onlyOneCore(tokenize(docs, textCol)).orderBy("bigram")
 
   /** [[onlyOneProbabilities]] over an already-tokenized word frame
-    * (column `w`) — see [[bigramProbabilitiesFromWords]]. */
-  def onlyOneProbabilitiesFromWords(rawWords: DataFrame): DataFrame = {
+    * (column `w`) — see [[bigramProbabilitiesFromWords]]; materialized
+    * like it. */
+  def onlyOneProbabilitiesFromWords(rawWords: DataFrame): DataFrame =
+    materialized(onlyOneCore(rawWords))
+
+  /** The lazy, unsorted `onlyOne` pipeline over a word frame (column `w`). */
+  private def onlyOneCore(rawWords: DataFrame): DataFrame = {
     val words = onlyOneFilter(rawWords)
     // Fuse the totalCount emission into the same explode as the bigrams —
     // ONE scan of the corpus, exactly like the reference's single ETS table
@@ -166,6 +176,19 @@ object TextPipeline {
       ngramsCol(col("w"), 2),
       when(totalCountPred(col("w")), array(lit("totalCount")))
         .otherwise(array().cast("array<string>")))).as("gram"))
-    withProbability(freqTable(keys, "bigram")).orderBy("bigram")
+    withProbability(freqTable(keys, "bigram"))
   }
+
+  /** Runs `result` once and returns its rows, sorted by `bigram`, as a
+    * local relation — the reference's one `orddict` behind both of its
+    * output files (`mapreduce.erl:96-103`): every later action reads
+    * driver memory instead of re-running the pipeline. Only for results
+    * whose size the key domain bounds, which is also why sorting inside one
+    * partition beats a global sort's range-partitioner sampling job.
+    * Deliberately not `persist`: a CacheManager entry keyed by the plan
+    * would hand a later read of the same path this call's data. */
+  private def materialized(result: DataFrame): DataFrame =
+    result.sparkSession.createDataFrame(
+      result.coalesce(1).sortWithinPartitions("bigram").collect().toSeq.asJava,
+      result.schema)
 }

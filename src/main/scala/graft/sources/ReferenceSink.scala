@@ -11,21 +11,20 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §7 risk register).
   *
   * Parity-mode sink: the reference writes one sorted file, so this
-  * coalesces to a single partition — applied AFTER aggregation, where the
-  * data is at most the key-domain size (≤676 bigrams), never on raw data. */
+  * coalesces to a single partition and sorts inside it — applied AFTER
+  * aggregation, where the data is at most the key-domain size (≤677
+  * rows), never on raw data. Sorting within the one partition needs no
+  * range partitioner, so a write runs no sampling job. */
 object ReferenceSink {
 
-  /** Format as the reference's results.txt lines (without the trailing
-    * newline — the text writer adds '\n', completing the CRLF). */
-  def formatted(df: DataFrame, keyCol: String, valCol: String): DataFrame =
-    df.orderBy(keyCol)
-      .select(concat(col(keyCol), lit(": \t\t "), col(valCol).cast("string"),
-        lit("\r")).as("value"))
-
-  /** Write `results.txt`-style output: sorted, single file. */
+  /** Write `results.txt`-style output, one file sorted by `keyCol`. Each
+    * line lacks only the trailing newline, which the text writer adds to
+    * complete the CRLF. */
   def writeCounts(df: DataFrame, keyCol: String, valCol: String,
       path: String): Unit =
-    formatted(df, keyCol, valCol).coalesce(1)
+    df.coalesce(1).sortWithinPartitions(keyCol)
+      .select(concat(col(keyCol), lit(": \t\t "), col(valCol).cast("string"),
+        lit("\r")).as("value"))
       .write.mode("overwrite").text(path)
 
   /** Split-phase partitioned word sink — the reference's 26-way
