@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
   * Output protocol: after EVERY query completes, the full cumulative
@@ -112,13 +110,11 @@ object Bench {
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
-    val spark = SparkSession.builder()
+    val spark = Graft.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
       .getOrCreate()
     // ERROR, not WARN: the take-the-last-line artifact protocol must
     // survive a driver TIMEOUT KILL, where the capture is cut at an

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev helper: print formatted/executed plans for declared queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = Graft.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false")
-      .config(Tables.NanosConf, "true").getOrCreate()
+      .config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val executed = args.headOption.contains("--executed")
     val names = (if (executed) args.drop(1) else args).toSeq match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: measured candidate counts per band geometry on an
@@ -9,10 +8,9 @@ import org.apache.spark.sql.functions._
   * surface. */
 object GeomProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = Graft.builder().master("local[32]")
       .appName("geomprobe").config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true").getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = args.headOption.getOrElse("/tmp/graft_scaling/x64")
     val docs = Tables.documents(spark, d)

@@ -17,15 +17,28 @@ import org.apache.spark.sql.SparkSession
   * this container's local mode. */
 object Graft {
 
-  /** A builder with graft's session extensions and the two configs the
-    * engine's semantics rely on: UTC session time (all date/window
-    * oracles are UTC-defined) and nanosecond-parquet timestamp reads
-    * (`Tables.events`). */
+  /** A builder with graft's session extensions and the fixed configs
+    * the engine relies on:
+    *  - UTC session time (all date/window oracles are UTC-defined);
+    *  - nanosecond-parquet timestamp reads (`Tables.events`);
+    *  - the local filesystem for both Hadoop APIs, `FileSystem` and
+    *    `FileContext`: [[GraftLocalFileSystem]] and [[GraftLocalFs]], which
+    *    fork no `chmod`/`readlink` process per file (Hadoop's stock classes
+    *    fork `chmod` without the native library and `readlink` with or
+    *    without it; see [[NioRawLocalFileSystem]]).
+    *
+    * Every graft `main` and the test session start here and add only
+    * their master, partition and log settings. [[install]] does not set
+    * the filesystem: a live session's `FileSystem` cache may already hold
+    * the stock class. */
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.NanosConf, "true")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[GraftLocalFs].getName)
 
   /** Install graft on a live session: SQL-registers the native
     * expressions and the as-of strategy/pruning rule (idempotent). */

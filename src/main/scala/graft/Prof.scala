@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev helper: steady-state per-query timings (rounds at local[32]). */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = Graft.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled","false")
-      .config(Tables.NanosConf, "true").getOrCreate()
+      .config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_PROF_ROUNDS", "2").toInt

@@ -303,13 +303,11 @@ object Scaling {
     // mode of the first ×64 attempt. More partitions = smaller spillable
     // units; AQE coalesces them back for the small factors.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
+    val spark = Graft.builder()
       .master(s"local[$cpus]")
       .appName("graft-scaling")
       .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

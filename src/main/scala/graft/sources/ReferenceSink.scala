@@ -1,7 +1,14 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.GraftRefusal
 
 /** The reference's formatted text sink (`/root/reference/mapreduce.erl:204-214`):
   * each sorted key/value pair as `~s: ~c~c ~w\r\n` with two literal tabs —
@@ -10,22 +17,45 @@ import org.apache.spark.sql.functions._
   * diverges from Erlang's — goldens for those compare parsed values
   * (SURVEY.md §7 risk register).
   *
-  * Parity-mode sink: the reference writes one sorted file, so this
-  * coalesces to a single partition and sorts inside it — applied AFTER
-  * aggregation, where the data is at most the key-domain size (≤677
-  * rows), never on raw data. Sorting within the one partition needs no
-  * range partitioner, so a write runs no sampling job. */
+  * Parity-mode sink: the reference appends its one sorted result file from
+  * one process, and so does this one — from the driver, through the
+  * session's Hadoop filesystem, with no Spark job. The file is a finished
+  * result of at most [[MaxRows]] rows, never raw data. */
 object ReferenceSink {
 
-  /** Write `results.txt`-style output, one file sorted by `keyCol`. Each
-    * line lacks only the trailing newline, which the text writer adds to
-    * complete the CRLF. */
+  /** The most rows a result file holds: the `[a-z]` gate bounds the
+    * reference's keys at 26² bigrams, plus the `onlyOne` `totalCount`
+    * row (BASELINE.md). */
+  val MaxRows = 677
+
+  /** Write `results.txt`-style output: one file, `part-00000.txt`, sorted
+    * by the string column `keyCol` in Spark's string order, then
+    * `_SUCCESS`; an existing `path` is replaced. Each line is formatted by
+    * Spark's own cast, so the bytes match a Spark text write of the same
+    * rows. On a local relation (the `TextPipeline.*FromWords` results)
+    * the formatting projection folds into the relation and the write runs
+    * no Spark job. Refuses a frame of more than [[MaxRows]] rows. */
   def writeCounts(df: DataFrame, keyCol: String, valCol: String,
-      path: String): Unit =
-    df.coalesce(1).sortWithinPartitions(keyCol)
-      .select(concat(col(keyCol), lit(": \t\t "), col(valCol).cast("string"),
-        lit("\r")).as("value"))
-      .write.mode("overwrite").text(path)
+      path: String): Unit = {
+    require(df.schema(keyCol).dataType == StringType,
+      s"writeCounts sorts on a string key; $keyCol is ${df.schema(keyCol).dataType}")
+    val rows = df.select(col(keyCol), concat(col(keyCol), lit(": \t\t "),
+        col(valCol).cast("string"), lit("\r\n")))
+      .limit(MaxRows + 1).collect()
+    GraftRefusal.check(rows.length <= MaxRows,
+      s"writeCounts writes one result file of at most $MaxRows rows from " +
+        s"driver memory; the frame for $path has more")
+    val lines = rows.sortBy(r => UTF8String.fromString(r.getString(0))).map(_.getString(1))
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    val tmp = new Path(dir, "_part-00000.txt.tmp")
+    val out = fs.create(tmp, false)
+    try lines.foreach(l => out.write(l.getBytes(UTF_8))) finally out.close()
+    if (!fs.rename(tmp, new Path(dir, "part-00000.txt")))
+      throw new java.io.IOException(s"could not rename $tmp in $dir")
+    fs.create(new Path(dir, "_SUCCESS"), false).close()
+  }
 
   /** Split-phase partitioned word sink — the reference's 26-way
     * first-letter fan-out (`/root/reference/mapreduce.erl:158-185`:

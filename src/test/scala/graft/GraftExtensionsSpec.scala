@@ -1,14 +1,24 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface of the native expressions. */
 class GraftExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private def registry = spark.sessionState.functionRegistry
+  private def resolves(name: String) = registry.functionExists(FunctionIdentifier(name))
+
   test("native expressions are callable from SQL after registration") {
     import spark.implicits._
+    // the builder's extensions inject the same names: drop them first, so
+    // only `register` can make them resolve
+    GraftFunctions.all.foreach { case (name, _, _) =>
+      registry.dropFunction(FunctionIdentifier(name)) }
+    assert(GraftFunctions.all.forall { case (name, _, _) => !resolves(name) })
     GraftFunctions.register(spark)
+    assert(GraftFunctions.all.forall { case (name, _, _) => resolves(name) })
 
     Seq(("tree house", 1L)).toDF("t", "id").createOrReplaceTempView("tv")
     val grams = spark.sql(
@@ -56,7 +66,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("Graft.install wires SQL functions and the native as-of on a live session") {
     import spark.implicits._
+    // undo what an earlier install left, so the asserts below see this one
+    registry.dropFunction(FunctionIdentifier("vector_norm"))
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies.filterNot(_ == graft.plans.AsOfJoinStrategy)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.PruneAsOfJoinColumns)
+    assert(!resolves("vector_norm"))
     Graft.install(spark)
+    assert(resolves("vector_norm"))
+    assert(spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.PruneAsOfJoinColumns))
     assert(spark.sql("SELECT vector_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))")
       .as[Double].head() === 5.0)
     val left = Seq((1L, 10L, "a")).toDF("k", "lts", "v")

@@ -5,13 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Graft.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextPipeline
@@ -12,7 +13,7 @@ import graft.sources.{ReferenceSink, WordListSource}
 /** The paper's job end to end on the in-repo fixture
   * `wordlist/quirks.ngl`: quirk read → `*FromWords` → reference sink. The
   * goldens are derived by hand, line by line, in `wordlist/quirks.md`. */
-class WordListPipelineSpec extends AnyFunSuite {
+class WordListPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
   private val fixture =
@@ -33,7 +34,12 @@ class WordListPipelineSpec extends AnyFunSuite {
   private def counts(df: DataFrame): Seq[(String, Long)] =
     df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
 
-  private def outDir(): Path = Files.createTempDirectory("wordlist-out")
+  private lazy val outRoot = Files.createTempDirectory("wordlist-out")
+  private def outDir(): Path = Files.createTempDirectory(outRoot, "case")
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(outRoot.toFile)
+    finally super.afterAll()
 
   private def partFile(dir: Path): Path = {
     val parts = dir.toFile.listFiles().filter(_.getName.startsWith("part-"))
@@ -108,6 +114,39 @@ class WordListPipelineSpec extends AnyFunSuite {
       TextPipeline.explodeNgrams(TextPipeline.mainFilter(words), 2), "bigram")
     ReferenceSink.writeCounts(lazyCounts, "bigram", "cnt", dir.toString)
     assert(Files.readAllBytes(partFile(dir)) sameElements countsBytes(mainGolden))
+  }
+
+  test("writeCounts on a materialized result runs no Spark job and leaves " +
+      "one part file plus _SUCCESS") {
+    val dir = outDir().resolve("counts")
+    val r = TextPipeline.bigramProbabilitiesFromWords(words)
+    val (_, usage) = SparkProbe.measure(spark) {
+      ReferenceSink.writeCounts(r, "bigram", "cnt", dir.toString)
+    }
+    assert(usage.jobs === 0)
+    val visible = dir.toFile.listFiles().map(_.getName).filterNot(_.startsWith(".")).sorted
+    assert(visible.toSeq === Seq("_SUCCESS", "part-00000.txt"))
+    assert(Files.readAllBytes(partFile(dir)) sameElements countsBytes(mainGolden))
+  }
+
+  test("a second writeCounts to the same path replaces the first") {
+    val dir = outDir().resolve("counts")
+    val r = TextPipeline.onlyOneProbabilitiesFromWords(words)
+    ReferenceSink.writeCounts(r, "bigram", "cnt", dir.toString)
+    ReferenceSink.writeCounts(r.filter("bigram < 'b'"), "bigram", "cnt", dir.toString)
+    assert(Files.readAllBytes(partFile(dir)) sameElements
+      countsBytes(onlyOneGolden.filter(_._1 < "b")))
+  }
+
+  test("writeCounts refuses a frame of more than 677 rows") {
+    import spark.implicits._
+    val dir = outDir().resolve("counts")
+    val big = (0 until 678).map(i => f"k$i%04d" -> i.toLong).toDF("k", "v")
+    val e = intercept[GraftRefusal](ReferenceSink.writeCounts(big, "k", "v", dir.toString))
+    assert(e.getMessage.contains("677"))
+    assert(!Files.exists(dir), "a refused write leaves nothing behind")
+    ReferenceSink.writeCounts(big.limit(677), "k", "v", dir.toString)
+    assert(Files.readAllLines(partFile(dir)).size === 677)
   }
 
   test("split-phase layout: one directory per first letter, exact words") {
