@@ -25,7 +25,17 @@ object Graft {
     *    `FileContext`: [[GraftLocalFileSystem]] and [[GraftLocalFs]], which
     *    fork no `chmod`/`readlink` process per file (Hadoop's stock classes
     *    fork `chmod` without the native library and `readlink` with or
-    *    without it; see [[NioRawLocalFileSystem]]).
+    *    without it; see [[NioRawLocalFileSystem]]);
+    *  - no per-session artifact isolation
+    *    (`spark.sql.artifact.isolation.enabled=false`). Spark caches
+    *    generated classes under the key (context classloader, code), and
+    *    with isolation on every session, including the clone each
+    *    streaming query runs in, gets a classloader of its own: a repeated
+    *    stream request recompiled every generated class (17 Janino
+    *    compiles per `events_windowed_stream` run on the sf0.001
+    *    fixture). graft adds no jars or files to any session, so isolation
+    *    bought it nothing. A caller that needs per-session artifacts must
+    *    build its own session.
     *
     * Every graft `main` and the test session start here and add only
     * their master, partition and log settings. [[install]] does not set
@@ -39,6 +49,7 @@ object Graft {
       .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[GraftLocalFs].getName)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Install graft on a live session: SQL-registers the native
     * expressions and the as-of strategy/pruning rule (idempotent). */

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DecimalType, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.Tables
 
@@ -54,8 +57,8 @@ object EventStream {
 
   /** Driver-surface WATERMARKED windowed aggregation under the actual
     * streaming engine: [[windowedCountsStream]] (30-minute watermark) run
-    * file source → state store → parquet sink with
-    * `Trigger.AvailableNow`, append mode.
+    * file source → state store → [[runAvailableNow]]'s in-memory
+    * batches, `Trigger.AvailableNow`, append mode.
     *
     * Append mode emits exactly the windows FINALIZED by the watermark —
     * a window leaves the state store once `window.end ≤ watermark`
@@ -67,20 +70,11 @@ object EventStream {
     * watermark/finalization behavior itself is cross-engine-checked,
     * not bypassed. */
   def windowedCountsStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("wincnt")
     val ss = streamSession(s)
     val q = windowedCountsStream(readEventStream(ss, d))
       .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
         .as("hour_start"), col("event_type"), col("n"), col("sum_value"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("hour_start", "event_type")
+    runAvailableNow(s, q, "wincnt").orderBy("hour_start", "event_type")
   }
 
   /** Driver-surface HOPPING (sliding) windowed aggregation under the
@@ -90,7 +84,6 @@ object EventStream {
     * entries. Same append-mode finalization contract, same ms-precision
     * oracle cutoff. */
   def hoppingCountsStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("hopcnt")
     val ss = streamSession(s)
     val q = readEventStream(ss, d)
       .withWatermark("ts", "30 minutes")
@@ -101,15 +94,7 @@ object EventStream {
           .as("sum_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
         .as("hop_start"), col("event_type"), col("n"), col("sum_value"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("hop_start", "event_type")
+    runAvailableNow(s, q, "hopcnt").orderBy("hop_start", "event_type")
   }
 
   /** Driver-surface per-window QUANTILES under the streaming engine —
@@ -125,7 +110,6 @@ object EventStream {
     * doubles in both engines (the `rel_percentiles` parity precedent,
     * here exercised through the streaming state-store path). */
   def quantileStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("winq")
     val ss = streamSession(s)
     val q = readEventStream(ss, d)
       .withWatermark("ts", "30 minutes")
@@ -136,15 +120,7 @@ object EventStream {
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
         .as("hour_start"), col("event_type"), col("n"),
         col("p50"), col("p95"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("hour_start", "event_type")
+    runAvailableNow(s, q, "winq").orderBy("hour_start", "event_type")
   }
 
   /** Driver-surface CHAINED STATEFUL OPERATORS under the streaming
@@ -164,7 +140,6 @@ object EventStream {
     * pre-shrunk. The batch equivalent's count(distinct) expands the
     * same way; streaming pays it incrementally. */
   def distinctUsersStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("distusr")
     val ss = streamSession(s)
     val q = readEventStream(ss, d)
       .withWatermark("ts", "30 minutes")
@@ -174,15 +149,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_users"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
         .as("hour_start"), col("n_users"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("hour_start")
+    runAvailableNow(s, q, "distusr").orderBy("hour_start")
   }
 
   /** File-based streaming source over the events parquet (ts
@@ -199,12 +166,23 @@ object EventStream {
     * a direct non-glob file path trips FileStreamSource's
     * `basePath must be a directory` check — the glob form keeps
     * basePath unset and lists exactly the table's data files. */
-  def readEventStream(s: SparkSession, dir: String): DataFrame = {
+  def readEventStream(s: SparkSession, dir: String): DataFrame =
+    readEventStream(s, dir, eventSchema(s, dir))
+
+  /** [[readEventStream]] with the schema already read by [[eventSchema]]. */
+  def readEventStream(s: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    Tables.normalizeEventTs(s.readStream.schema(schema)
+      .parquet(s"$dir/events.parquet{,/*}"))
+
+  /** The events table's parquet schema under the nanos-as-long read
+    * ([[graft.Tables.NanosConf]], set here if the session lacks it).
+    * Reading it runs a one-task footer job, so a query that reads the
+    * stream twice reads the schema once and passes it to both reads. */
+  def eventSchema(s: SparkSession, dir: String): StructType = {
     if (!s.conf.getOption(Tables.NanosConf).contains("true"))
       s.conf.set(Tables.NanosConf, "true")
-    Tables.normalizeEventTs(s.readStream
-      .schema(Tables.load(s, dir, "events").schema)
-      .parquet(s"$dir/events.parquet{,/*}"))
+    Tables.load(s, dir, "events").schema
   }
 
   /** Streaming CSV source. Streaming file sources cannot infer schemas
@@ -243,23 +221,19 @@ object EventStream {
   /** Driver-surface STREAMING DEDUP under the real engine: the event
     * stream UNIONED WITH ITSELF (two independent file-source reads of the
     * same parquet — a genuine 2× duplicate load, not a no-op pass) flows
-    * through [[dedupEventsStream]]; the sink must contain every event
+    * through [[dedupEventsStream]]; the output must hold every event
     * exactly once. The oracle is the plain distinct projection of the
     * events table, so the state-store dedup semantics are checked
     * end-to-end against a batch engine that never saw duplicates. */
   def dedupStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("dedup")
     val ss = streamSession(s)
-    val doubled = readEventStream(ss, d).union(readEventStream(ss, d))
+    // one footer read for both file-source reads
+    val schema = eventSchema(ss, d)
+    val doubled =
+      readEventStream(ss, d, schema).union(readEventStream(ss, d, schema))
     val q = dedupEventsStream(doubled)
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // the exactly-once-vs-distinct-oracle claim relies on both copies of
     // each event landing in the SAME micro-batch: dropDuplicatesWithin-
     // Watermark evicts an id's state once the watermark passes ts+30min,
@@ -271,18 +245,14 @@ object EventStream {
     // event-time span so no state is evicted mid-run — are pinned by
     // StreamingSpec ("streaming dedup stays exactly-once across
     // multiple micro-batches").
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    // cleanup in finally: a failed assertion must not strand the scratch
-    // dirs (full event copies) under /tmp — the ADVICE r3 accumulation
-    val res = try {
+    runAvailableNow(s, q, "dedup", run => {
+      val dataBatches = run.recentProgress.count(_.numInputRows > 0)
       require(dataBatches == 1,
         s"dedup stream ran $dataBatches data micro-batches; the distinct " +
           "oracle is only exact for a single-batch run — widen the dedup " +
           "watermark to cover the fixture's event-time span if the source " +
           "is ever split across batches")
-      s.read.parquet(out).localCheckpoint()
-    } finally deleteRecursively(out, ckpt)
-    res.orderBy("event_id")
+    }).orderBy("event_id")
   }
 
   // ------------------------------------------------------------------
@@ -295,7 +265,7 @@ object EventStream {
     * batch twin's convention) arrive on a file stream, shingle +
     * minhash-band MAP-ONLY inside the stream, equi-join the STATIC
     * corpus band index, and every band candidate is verified with the
-    * exact shingle Jaccard — the sink holds all confirmed
+    * exact shingle Jaccard — the output holds all confirmed
     * (new doc, corpus doc) matches ≥ the shared threshold.
     *
     * Why each stage is stream-shaped:
@@ -331,7 +301,6 @@ object EventStream {
     import graft.operators.Dedup
     import Dedup.MinHashParams
     import graft.functions.WordShingles
-    val (out, ckpt) = scratchDirs("incdedup")
     val ss = streamSession(s)
     val P = Dedup.P
     // The static corpus index is a BATCH build (shingle explode →
@@ -425,15 +394,7 @@ object EventStream {
       .select(col("n").as("doc_id"), col("o").as("dup_of"),
         round(col("c") * lit(1.0) / (col("szn") + col("szo") - col("c")), 6)
           .as("jaccard"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = try s.read.parquet(out).localCheckpoint()
-      finally deleteRecursively(out, ckpt)
-    res.orderBy("doc_id", "dup_of")
+    runAvailableNow(s, q, "incdedup").orderBy("doc_id", "dup_of")
   }
 
   // ------------------------------------------------------------------
@@ -471,7 +432,6 @@ object EventStream {
     * range verify end-to-end. */
   def vectorIngestStreamVerified(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Similarity
-    val (out, ckpt) = scratchDirs("annin")
     val ss = streamSession(s)
     def quant(c: org.apache.spark.sql.Column) =
       transform(c, x => floor(x.cast("double") * lit(1048576.0)).cast("long"))
@@ -539,15 +499,7 @@ object EventStream {
       .filter(col("cos") >= Similarity.RangeThreshold)
       .select(col("vec_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cosine"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = try s.read.parquet(out).localCheckpoint()
-      finally deleteRecursively(out, ckpt)
-    res.orderBy("vec_id", "neighbor_id")
+    runAvailableNow(s, q, "annin").orderBy("vec_id", "neighbor_id")
   }
 
   // ------------------------------------------------------------------
@@ -576,7 +528,6 @@ object EventStream {
     * decoded pixels. */
   def mediaIngestStreamVerified(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Multimodal
-    val (out, ckpt) = scratchDirs("mmin")
     val ss = streamSession(s)
     // n-ADAPTIVE geometry (see [[MediaIngestWideMinImages]]): the image
     // corpus count is known at stream start, and both the static index
@@ -649,15 +600,7 @@ object EventStream {
         bit_count(col("sig").bitwiseXOR(col("nsig"))).cast("int")
           .as("hamming"))
       .filter(col("hamming") <= Multimodal.PhashMaxHamming)
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = try s.read.parquet(out).localCheckpoint()
-      finally deleteRecursively(out, ckpt)
-    res.orderBy("media_id", "neighbor_id")
+    runAvailableNow(s, q, "mmin").orderBy("media_id", "neighbor_id")
   }
 
   // ------------------------------------------------------------------
@@ -675,7 +618,6 @@ object EventStream {
     * The oracle is the plain batch left join, so the streaming engine's
     * static-side broadcast semantics are checked end-to-end. */
   def enrichedStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("enrich")
     val ss = streamSession(s)
     val dim = graft.Tables.customer(ss, d)
       .select(col("c_custkey").as("user_id"),
@@ -684,15 +626,7 @@ object EventStream {
       .join(broadcast(dim), Seq("user_id"), "left")
       .select(col("event_id"), col("user_id"), col("event_type"),
         coalesce(col("segment"), lit("none")).as("segment"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("event_id")
+    runAvailableNow(s, q, "enrich").orderBy("event_id")
   }
 
   // ------------------------------------------------------------------
@@ -719,7 +653,7 @@ object EventStream {
 
   /** Driver-surface STREAM-STREAM interval join: [[clickAttributionStream]]
     * run under the streaming engine as a self-join of two filtered reads
-    * of the event stream (watermarked both sides, parquet sink,
+    * of the event stream (watermarked both sides, [[runAvailableNow]],
     * `Trigger.AvailableNow`), returning the matched (purchase, click)
     * pairs for the driver's oracle compare against the plain SQL interval
     * join. Inner joins emit matches as both sides arrive, so on a bounded
@@ -822,17 +756,38 @@ object EventStream {
     ss
   }
 
-  /** Scratch dirs for a streaming-sink run + recursive cleanup. The sink
-    * parquet must outlive only the eager `localCheckpoint()` that copies
-    * the result into the block manager — after that both dirs are deleted
-    * (Bench used to invoke each *_stream query repeatedly, accumulating
-    * full parquet copies under /tmp per run — ADVICE r3). */
-  private def scratchDirs(tag: String): (String, String) = (
-    java.nio.file.Files.createTempDirectory(s"graft-$tag-out").toString,
-    java.nio.file.Files.createTempDirectory(s"graft-$tag-ckpt").toString)
+  /** Runs the streaming frame `q` to its end under `Trigger.AvailableNow`
+    * in append mode and returns every row it emitted, as a frame of the
+    * caller's session `s`. A `foreachBatch` sink `localCheckpoint()`s each
+    * micro-batch, so the result stays in the block manager and is never
+    * written out and read back; the frame is the union of those batches,
+    * or an empty `LocalRelation` of `q.schema` when no batch ran. `check`
+    * sees the finished query (its progress reports) before the frame is
+    * built. The checkpoint directory is deleted in every case, also when
+    * the query or `check` throws (Bench invokes each `*_stream` query
+    * repeatedly, so a stranded directory per run would accumulate). */
+  private[graft] def runAvailableNow(s: SparkSession, q: DataFrame,
+      tag: String, check: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val ckpt =
+      java.nio.file.Files.createTempDirectory(s"graft-$tag-ckpt").toString
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    val keep: (DataFrame, Long) => Unit =
+      (batch, _) => batches.add(batch.localCheckpoint())
+    try {
+      val run = q.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(keep)
+        .start()
+      run.awaitTermination()
+      check(run)
+    } finally deleteRecursively(ckpt)
+    if (batches.isEmpty) s.createDataFrame(java.util.List.of[Row](), q.schema)
+    else graftshim.unionLocalCheckpoints(s, batches.asScala.toSeq)
+  }
 
-  private def deleteRecursively(paths: String*): Unit = paths.foreach { p =>
-    val root = java.nio.file.Paths.get(p)
+  private def deleteRecursively(path: String): Unit = {
+    val root = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.exists(root)) {
       val walk = java.nio.file.Files.walk(root)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -853,7 +808,6 @@ object EventStream {
     * are dropped immediately; unmatched ones evict once they can no
     * longer match). */
   def semiJoinStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("semij")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -867,15 +821,7 @@ object EventStream {
                 cts >= pts - interval 10 minutes AND cts <= pts"""),
         "left_semi")
       .select(col("p_event"), col("user_id"), unix_micros(col("pts")).as("p_us"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("p_event")
+    runAvailableNow(s, q, "semij").orderBy("p_event")
   }
 
   /** Stream-stream LEFT OUTER interval join under the engine — the one
@@ -895,7 +841,6 @@ object EventStream {
     * reachable. State on each side is bounded by rate × (delay +
     * range), exactly as in [[clickAttributionStream]]. */
   def outerJoinStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("outerj")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -911,18 +856,10 @@ object EventStream {
         "left_outer")
       .select(col("p_event"), col("user_id"), unix_micros(col("pts")).as("p_us"),
         col("c_event"), unix_micros(col("cts")).as("c_us"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
     // c_event is null on the watermark-emitted rows: sort nulls FIRST
     // explicitly (Spark's ASC default) so the oracle can mirror it with
     // NULLS FIRST rather than relying on either engine's default
-    res.orderBy(col("p_event").asc, col("c_event").asc_nulls_first)
+    runAvailableNow(s, q, "outerj").orderBy(col("p_event").asc, col("c_event").asc_nulls_first)
   }
 
   /** Stream-stream ANTI interval join — "purchases with NO qualifying
@@ -936,7 +873,6 @@ object EventStream {
     * [[outerJoinStreamVerified]]; the oracle keeps only the unmatched
     * branch of the outer oracle. */
   def antiJoinStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("antij")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -953,15 +889,7 @@ object EventStream {
       .filter(col("c_event").isNull)
       .select(col("p_event"), col("user_id"),
         unix_micros(col("pts")).as("p_us"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("p_event")
+    runAvailableNow(s, q, "antij").orderBy("p_event")
   }
 
   /** Stream-stream FULL OUTER interval join — completes the outer
@@ -977,7 +905,6 @@ object EventStream {
     * — along with the tail rule that rows inside their own cutoff
     * window never emit. */
   def fullOuterJoinStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("fouterj")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -993,19 +920,10 @@ object EventStream {
         "full_outer")
       .select(col("p_event"), col("p_user"), unix_micros(col("pts")).as("p_us"),
         col("c_event"), col("c_user"), unix_micros(col("cts")).as("c_us"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy(col("p_event").asc_nulls_first, col("c_event").asc_nulls_first)
+    runAvailableNow(s, q, "fouterj").orderBy(col("p_event").asc_nulls_first, col("c_event").asc_nulls_first)
   }
 
   def clickAttributionStreamVerified(s: SparkSession, d: String): DataFrame = {
-    val (out, ckpt) = scratchDirs("attr")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -1017,17 +935,7 @@ object EventStream {
     val q = clickAttributionStream(purchases, clicks)
       .select(col("p_event"), col("c_event"),
         unix_micros(col("pts")).as("p_us"), unix_micros(col("cts")).as("c_us"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // eager copy into the block manager, then drop the scratch dirs —
-    // the returned frame must not lazily re-read the deleted sink
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.orderBy("p_event", "c_event")
+    runAvailableNow(s, q, "attr").orderBy("p_event", "c_event")
   }
 
   // ------------------------------------------------------------------
@@ -1091,8 +999,8 @@ object EventStream {
 
   /** Driver-surface STREAMING sessionization — the stateful
     * [[sessionizeStateful]] pipeline run under the actual streaming
-    * engine (file source → keyed state store → parquet sink,
-    * `Trigger.AvailableNow`), returning the sink's contents so the
+    * engine (file source → keyed state store → [[runAvailableNow]],
+    * `Trigger.AvailableNow`), returning the emitted sessions so the
     * driver checks it against the SAME DuckDB oracle as the batch
     * gaps-and-islands query: one oracle, three implementations (window
     * SQL, stateful batch, stateful streaming).
@@ -1109,7 +1017,6 @@ object EventStream {
     * unbounded inputs is exercised by the MemoryStream specs. */
   def sessionizeStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("sess")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .select(col("user_id"), col("ts"),
@@ -1117,15 +1024,7 @@ object EventStream {
           .as("value"))
       .as[Ev]
     val q = sessionizeStateful(ev, closeTrailing = true).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res
+    runAvailableNow(s, q, "sess")
       .select(col("user_id"), col("session_idx"), col("start_us"),
         col("end_us"), col("n_events"),
         (col("sum_value") / 1e6).as("sum_value"))
@@ -1348,50 +1247,32 @@ object EventStream {
   }
 
   /** Driver-surface STREAMING THROTTLE under the real engine (file
-    * source → keyed state → parquet sink, AvailableNow): the reject
+    * source → keyed state → [[runAvailableNow]], AvailableNow): the reject
     * stream, checked against a batch window oracle (`row_number() > cap
     * per (user, day)` in both engines). */
   def throttleStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("throttle")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .select(col("user_id"), col("event_id"), col("ts"))
       .as[ThrottleEv]
     val q = throttleStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.select(col("user_id"), col("event_id"))
+    runAvailableNow(s, q, "throttle").select(col("user_id"), col("event_id"))
       .orderBy("user_id", "event_id")
   }
 
   /** Driver-surface STREAMING CUSUM under the real engine (file source →
-    * keyed state → parquet sink, AvailableNow), checked against the SAME
+    * keyed state → [[runAvailableNow]], AvailableNow), checked against the SAME
     * DuckDB oracle as the batch `events_cusum` window query: one oracle,
     * two execution models. */
   def cusumStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("cusum")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .select(col("user_id"), col("event_id"), col("ts"), col("value"))
       .as[CusumEv]
     val q = cusumStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.select(col("user_id"), col("event_id"), col("cusum_scaled"),
+    runAvailableNow(s, q, "cusum").select(col("user_id"), col("event_id"), col("cusum_scaled"),
         round(col("cusum_scaled") / lit(1000000.0), 6).as("cusum"))
       .orderBy("user_id", "event_id")
   }
@@ -1409,7 +1290,7 @@ object EventStream {
     * is the last 7 cent values (newest first, ≤ 56 bytes), so each
     * arriving event emits the SAME weighted sum/denominator the batch
     * window query computes with its `lag()` taps. All state arithmetic
-    * is BIGINT; the one float division happens AFTER the sink, in the
+    * is BIGINT; the one float division happens AFTER the stream, in the
     * same Spark `round(wsum / (wden · 100.0), 6)` expression the batch
     * operator uses (the [[cusumStateful]] rule: never round inside the
     * stateful function).
@@ -1445,26 +1326,17 @@ object EventStream {
       }
   }
 
-  /** Driver-surface run of [[ewmaStateful]]: parquet sink, AvailableNow,
+  /** Driver-surface run of [[ewmaStateful]]: [[runAvailableNow]],
     * then the batch operator's exact output projection — same columns,
     * same oracle as `events_ewma`. */
   def ewmaStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("ewma")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .select(col("user_id"), col("event_id"), col("value"))
       .as[EwmaEv]
     val q = ewmaStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.select(col("event_id"), col("user_id"), col("value"),
+    runAvailableNow(s, q, "ewma").select(col("event_id"), col("user_id"), col("value"),
         round(col("wsum") / (col("wden") * lit(100.0)), 6).as("ewma"))
       .orderBy("event_id")
   }
@@ -1527,25 +1399,16 @@ object EventStream {
       }
   }
 
-  /** Driver-surface run of [[anomalyStateful]]: parquet sink,
-    * AvailableNow, total order on the arrival key. */
+  /** Driver-surface run of [[anomalyStateful]]: [[runAvailableNow]],
+    * total order on the arrival key. */
   def anomalyStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("anomaly")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .select(col("event_type"), col("event_id"), col("value"))
       .as[AnomEv]
     val q = anomalyStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.select("event_id", "event_type", "value").orderBy("event_id")
+    runAvailableNow(s, q, "anomaly").select("event_id", "event_type", "value").orderBy("event_id")
   }
 
   // ------------------------------------------------------------------
@@ -1587,25 +1450,17 @@ object EventStream {
   }
 
   /** Driver-surface run of [[latenessStateful]]: the same salted frame,
-    * parquet sink, AvailableNow, then the batch histogram tail — SAME
+    * [[runAvailableNow]], then the batch histogram tail — SAME
     * oracle as `events_lateness`. */
   def latenessStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("latemon")
     val ss = streamSession(s)
     val ev = graft.operators.Curation
       .saltedEventTimes(readEventStream(ss, d))
       .as[LateEv]
     val q = latenessStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    graft.operators.Curation.latenessHistogramOn(res.select("late_us"))
+    graft.operators.Curation.latenessHistogramOn(
+      runAvailableNow(s, q, "latemon").select("late_us"))
   }
 
   // ------------------------------------------------------------------
@@ -1670,26 +1525,17 @@ object EventStream {
       }
   }
 
-  /** Driver-surface run of [[topkStateful]]: parquet sink, AvailableNow,
+  /** Driver-surface run of [[topkStateful]]: [[runAvailableNow]],
     * hour label formatted like the windowed-agg queries. */
   def topkStreamVerified(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (out, ckpt) = scratchDirs("topk")
     val ss = streamSession(s)
     val ev = readEventStream(ss, d)
       .withWatermark("ts", "30 minutes")
       .select(col("ts"), col("user_id"))
       .as[TopkEv]
     val q = topkStateful(ev).toDF()
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = s.read.parquet(out).localCheckpoint()
-    deleteRecursively(out, ckpt)
-    res.select(
+    runAvailableNow(s, q, "topk").select(
         date_format((col("window_h") * 3600).cast("timestamp"),
           "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("rank"), col("user_id"), col("n_events"), col("n_users"))

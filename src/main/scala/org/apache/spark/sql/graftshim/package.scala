@@ -39,6 +39,21 @@ package object graftshim {
       case _ => false
     }
 
+  /** One frame of `spark` over the union of `localCheckpoint()`ed frames,
+    * which may belong to other sessions of the same context (the
+    * micro-batches of a streaming query's cloned session): a single
+    * `LogicalRDD` leaf over their checkpointed RDDs, with the first
+    * frame's schema. Runs no job and copies no row. */
+  def unionLocalCheckpoints(spark: SparkSession, parts: Seq[DataFrame]): DataFrame = {
+    val rdds = parts.map(_.queryExecution.analyzed match {
+      case lr: execution.LogicalRDD => lr.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a localCheckpoint()ed frame: ${p.nodeName}")
+    })
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(spark.sparkContext.union(rdds), parts.head.schema)
+  }
+
   /** The id of the persisted RDD behind a `localCheckpoint()`ed frame
     * (None for any other plan shape). For specs that assert the memo's
     * SPECIFIC blocks were freed: comparing absolute

@@ -64,6 +64,9 @@ class CorpusCountMemoSpec extends AnyFunSuite {
       val afterMemo = stableCount()
       assert(afterMemo === afterFirst,
         s"memoized lookups ran ${afterMemo - afterFirst} extra actions")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 }

@@ -99,39 +99,43 @@ class ReferenceCorpusSpec extends AnyFunSuite {
 
   test("split-phase sink: 26 letter partitions, contents = filtered words") {
     val out = java.nio.file.Files.createTempDirectory("splitphase").toString
-    val words = WordListSource.read(spark, corpus, referenceQuirk = true)
-    ReferenceSink.writeSplitPhase(words, out)
-    // layout parity with only<a>.txt..only<z>.txt: one directory per letter
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq === ('a' to 'z').map(c => s"first_letter=$c"),
-      "expected 26 first_letter partitions")
-    // skew facts from FIXTURES.md: max 's' = 37,438, min 'x' = 429 — read
-    // back through partition pruning (a pruned scan touches ONE directory)
-    val back = spark.read.option("basePath", out).text(out)
-      .withColumn("first_letter",
-        regexp_extract(input_file_name(), "first_letter=([a-z])", 1))
-    val s = spark.read.text(s"$out/first_letter=s").count()
-    val x = spark.read.text(s"$out/first_letter=x").count()
-    assert(s === 37438L, "words under s")
-    assert(x === 429L, "words under x")
-    assert(back.count() === 354913L, "total words across partitions")
+    try {
+      val words = WordListSource.read(spark, corpus, referenceQuirk = true)
+      ReferenceSink.writeSplitPhase(words, out)
+      // layout parity with only<a>.txt..only<z>.txt: one directory per letter
+      val dirs = new java.io.File(out).listFiles()
+        .filter(_.isDirectory).map(_.getName).sorted
+      assert(dirs.toSeq === ('a' to 'z').map(c => s"first_letter=$c"),
+        "expected 26 first_letter partitions")
+      // skew facts from FIXTURES.md: max 's' = 37,438, min 'x' = 429 — read
+      // back through partition pruning (a pruned scan touches ONE directory)
+      val back = spark.read.option("basePath", out).text(out)
+        .withColumn("first_letter",
+          regexp_extract(input_file_name(), "first_letter=([a-z])", 1))
+      val s = spark.read.text(s"$out/first_letter=s").count()
+      val x = spark.read.text(s"$out/first_letter=x").count()
+      assert(s === 37438L, "words under s")
+      assert(x === 429L, "words under x")
+      assert(back.count() === 354913L, "total words across partitions")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
   test("split-phase sink on test.ngl: per-letter contents are exact") {
     val out = java.nio.file.Files.createTempDirectory("splitphase-sm").toString
-    val words = WordListSource.read(spark, testNgl, referenceQuirk = true)
-    ReferenceSink.writeSplitPhase(words, out)
-    val expected = TextPipeline.mainFilter(words)
-      .collect().map(_.getString(0)).groupBy(_.head)
-    expected.foreach { case (letter, ws) =>
-      val got = spark.read.text(s"$out/first_letter=$letter")
-        .collect().map(_.getString(0)).sorted
-      assert(got.toSeq === ws.sorted.toSeq, s"partition $letter")
-    }
-    // no stray partitions beyond the letters that actually occur
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq === expected.keys.toSeq.sorted.map(c => s"first_letter=$c"))
+    try {
+      val words = WordListSource.read(spark, testNgl, referenceQuirk = true)
+      ReferenceSink.writeSplitPhase(words, out)
+      val expected = TextPipeline.mainFilter(words)
+        .collect().map(_.getString(0)).groupBy(_.head)
+      expected.foreach { case (letter, ws) =>
+        val got = spark.read.text(s"$out/first_letter=$letter")
+          .collect().map(_.getString(0)).sorted
+        assert(got.toSeq === ws.sorted.toSeq, s"partition $letter")
+      }
+      // no stray partitions beyond the letters that actually occur
+      val dirs = new java.io.File(out).listFiles()
+        .filter(_.isDirectory).map(_.getName).sorted
+      assert(dirs.toSeq === expected.keys.toSeq.sorted.map(c => s"first_letter=$c"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 }

@@ -88,17 +88,22 @@ class WordListSourceSpec extends AnyFunSuite {
   }
 
   test("a missing file fails as the default read does, with PATH_NOT_FOUND") {
-    val missing = Paths.get(Files.createTempDirectory("wordlist").toString, "absent.ngl")
-    val e = intercept[AnalysisException](
-      WordListSource.read(spark, missing.toString, referenceQuirk = true))
-    assert(e.getMessage.contains("PATH_NOT_FOUND"))
+    val dir = Files.createTempDirectory("wordlist")
+    try {
+      val missing = dir.resolve("absent.ngl")
+      val e = intercept[AnalysisException](
+        WordListSource.read(spark, missing.toString, referenceQuirk = true))
+      assert(e.getMessage.contains("PATH_NOT_FOUND"))
+    } finally Files.delete(dir)
   }
 
   test("a compressed file is refused: its line keys are not byte offsets") {
     val gz = Files.createTempFile("wordlist", ".ngl.gz")
-    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
-    try out.write("ab\ncd".getBytes(US_ASCII)) finally out.close()
-    intercept[IllegalArgumentException](
-      WordListSource.read(spark, gz.toString, referenceQuirk = true))
+    try {
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+      try out.write("ab\ncd".getBytes(US_ASCII)) finally out.close()
+      intercept[IllegalArgumentException](
+        WordListSource.read(spark, gz.toString, referenceQuirk = true))
+    } finally Files.delete(gz)
   }
 }
