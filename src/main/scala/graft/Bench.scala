@@ -104,6 +104,11 @@ object Bench {
     finally src.close()
   } catch { case _: Exception => -1.0 }
 
+  /** Path of one of the reference's own input files under
+    * `SPARK_GRAFT_REFERENCE_DIR` (default `/root/reference`). */
+  def referenceFile(name: String): String = java.nio.file.Paths.get(
+    sys.env.getOrElse("SPARK_GRAFT_REFERENCE_DIR", "/root/reference"), name).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -132,7 +137,7 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
 
     // Same-data baseline rows (VERDICT r14 item 4): the bigram pipeline
-    // over the ACTUAL reference corpus /root/reference/354984si.ngl —
+    // over the ACTUAL reference corpus 354984si.ngl —
     // the exact 3.5 MB file behind every BASELINE.md number (6.238 s
     // `main`, 7.379 s `onlyOne` on the reference's best single-box
     // config, timings.txt:1-17). The standing sf0.1 comparison carried
@@ -141,8 +146,7 @@ object Bench {
     // Bench-only, like the shared_* rows: no oracle entry, no new query
     // (the VALUES are already golden-pinned by ReferenceCorpusSpec) —
     // only a timing over the same bytes the reference timed.
-    val refCorpus = sys.env.getOrElse(
-      "SPARK_GRAFT_REFERENCE_CORPUS", "/root/reference/354984si.ngl")
+    val refCorpus = referenceFile("354984si.ngl")
     def refWords() =
       sources.WordListSource.read(spark, refCorpus, referenceQuirk = true)
     val benchOnly: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
@@ -155,14 +159,14 @@ object Bench {
     // file — an env override to a tiny fixture would silently ship a
     // flattering number. The artifact therefore carries the corpus's
     // own word count as `reference_corpus_words` next to the cells
-    // (ReferenceCorpusSpec pins the same count against the same env
-    // default).
+    // (ReferenceCorpusSpec pins the same count at the same path).
     val refCorpusWords: Option[Long] =
       try Some(refWords().count())
       catch {
         case e: Exception =>
           System.err.println(
-            s"[bench] reference corpus $refCorpus unreadable: ${e.getMessage}")
+            s"[bench] reference corpus $refCorpus unreadable (set " +
+              s"SPARK_GRAFT_REFERENCE_DIR): ${e.getMessage}")
           None
       }
 
@@ -351,8 +355,8 @@ object Bench {
     }
 
     // Pre-materialize the shared edge graphs before any timed pass, and
-    // ship each build as its OWN artifact line (`shared_*`, the Scaling
-    // naming — VERDICT r8 item 3): consumers then measure CONSUMER cost
+    // ship each build as its OWN artifact line (`shared_*`, the naming
+    // SCALING.json's rows use — VERDICT r8 item 3): consumers then measure CONSUMER cost
     // over the memoized graph, and a slow build shows up attributed to
     // the build line instead of smearing onto whichever consumer runs
     // first (the r8 `dedup_report` 2.5x drift class). One-shot by

@@ -5,10 +5,10 @@ package graft
   * declines oversized input and names its scale dial instead of
   * detonating (the [[operators.Dedup.MaxNaiveShingleDf]] convention).
   *
-  * A TYPE, not a message: the Scaling harness previously classified
+  * A TYPE, not a message: a former scaling harness classified
   * refusals by sniffing `getMessage.contains("refus")`, which
   * misclassified `dedup_clusters` ×64 as an error (-1) while ×16
-  * recorded the refusal (-2) — VERDICT r9 item 6. Harness code matches
+  * recorded the refusal (-2) — VERDICT r9 item 6. Callers match
   * on the type (via [[GraftRefusal.isRefusal]], which walks the cause
   * chain because Spark may wrap driver-side exceptions); extending
   * `IllegalArgumentException` keeps every existing `require`-era
@@ -23,7 +23,7 @@ object GraftRefusal {
 
   /** How many cause links [[isRefusal]] will walk. Cyclic cause chains
     * are constructible (`a.initCause(b); b.initCause(a)`) and an
-    * unbounded walk would spin the harness's classification path
+    * unbounded walk would spin a caller's classification path
     * forever; real wrap depth (SparkException over driver exceptions)
     * is single digits, so 50 is pure headroom — the JDK's own
     * `printStackTrace` guards the same hazard with a dejaVu set. */

@@ -3,34 +3,28 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scaling harness: measures how the expensive query plans
-  * actually behave as the data grows, the artifact the reference itself
-  * ships for its engine (`timings.txt:1-17`, its 1–4-node wall-clock
-  * table) and the piece SCALE.md's prose arguments were missing.
+/** The scale-factor inflater: writes an F-fold copy of a star-schema
+  * fixture directory so `graft.Bench` can time every cell at F× the
+  * data (`SPARK_GRAFT_SF_DIR=<dest>`), the shape of the reference's own
+  * 1–4-node table (`timings.txt:1-17`).
   *
-  * Method: the driver's testdata tops out at sf0.1 (read-only), so the
-  * harness inflates it by KEY-SHIFTED SELF-UNION — factor F concatenates
-  * F copies of every fact table with all join keys shifted by
-  * `copy * KeyShift`, preserving uniqueness, referential integrity and
-  * every per-copy distribution, then writes the result as parquet
-  * scratch (the same trick `SimilaritySpec`'s 10×-corpus contract test
-  * uses, made a reusable artifact). Two columns need more than a key
-  * shift to keep the WORKLOAD shape honest at F×:
+  * Method: KEY-SHIFTED SELF-UNION — factor F concatenates F copies of
+  * every fact table with all join keys shifted by `copy * KeyShift`,
+  * preserving uniqueness, referential integrity and every per-copy
+  * distribution. Two columns need more than a key shift to keep the
+  * WORKLOAD shape honest at F×:
   *
   *   - `documents.text`: verbatim copies would make every doc an exact
   *     F-plex — near-dup candidate pairs would then grow ~F² and the
-  *     harness would report superlinear scaling that says nothing about
+  *     timings would show superlinear scaling that says nothing about
   *     the plans. Each copy instead maps letters through a per-copy
   *     AFFINE permutation of the alphabet (`translate`, codegen'd; see
   *     [[permAlphabet]] — distinct maps up to ×[[AffineTextPeriod]], so
-  *     no exact cross-copy twins recur, unlike the pre-r12 period-26
-  *     rotation): within-copy structure (shingle df profile, doc
-  *     lengths, dup clusters) is IDENTICAL to the base corpus under
-  *     renamed tokens, while cross-copy shingle overlap is ~zero — F×
-  *     more data of the same character, which is what a bigger crawl
-  *     looks like. The old rotation survives as the LABELED dup-heavy
-  *     regime (`*_dupheavy` rows at ×32/×64/×128) whose wrapped copies
-  *     plant ~F²/26 exact twins — the duplicate-laden crawl case.
+  *     no exact cross-copy twins recur): within-copy structure
+  *     (shingle df profile, doc lengths, dup clusters) is IDENTICAL to
+  *     the base corpus under renamed tokens, while cross-copy shingle
+  *     overlap is ~zero — F× more data of the same character, which is
+  *     what a bigger crawl looks like.
   *   - `embeddings.embedding`: copies rotate the vector cyclically by
   *     `copy` positions (dim 64 ≥ max copies). Norms and within-copy
   *     geometry are preserved exactly; cross-copy vectors point in
@@ -39,798 +33,28 @@ import org.apache.spark.sql.functions._
   *     searches an F× corpus — the production "corpus grows, queries
   *     don't" shape.
   *
-  * Per factor the shared edge graphs are pre-materialized (timed,
-  * reported as `shared_*` rows — the graph build IS the real scale cost
-  * for the cluster consumers, mirroring Bench's policy). Each panel
-  * query then runs warmup + timed passes (min; the storm hazards from
-  * the verify skill apply at every size) and the artifact records
-  * per-query seconds at each factor plus the least-squares exponent of
-  * ln(t) on ln(F). exponent ≈ 1 = linear scaling; > ~1.3 on this
-  * shuffle-light box earns a SCALE.md explanation or a fix.
-  *
-  * r9 columns (VERDICT r8 items 2 + 4): every row also records the
-  * run's shuffle WRITE volume (`shuffle_mb_x{F}` + `shuffle_exponent`)
-  * — on a memory-resident box, bytes that grow superlinearly are a
-  * 100 TB risk wall time can't show yet — and the [[StreamPanel]]
-  * streaming queries run at ×1/×4/×16 with the peak state-store
-  * footprint from their progress events (`state_rows_x{F}` /
-  * `state_mb_x{F}` + `state_rows_exponent`), the reference's own
-  * scaling-table shape (`timings.txt:1-17`) extended to the streaming
-  * half of the engine.
-  *
-  * Run: `sbt "runMain graft.Scaling"` → writes SCALING.json (cwd).
-  * Env knobs: SPARK_GRAFT_SCALING_BASE (default /root/testdata/sf0.1),
-  * SPARK_GRAFT_SCALING_DIR (scratch, default /tmp/graft_scaling),
-  * SPARK_GRAFT_SCALING_FACTORS (default "1,4,16"),
-  * SPARK_GRAFT_SCALING_QUERIES (comma list overriding the panel),
-  * SPARK_GRAFT_SCALING_OUT (default SCALING.json).
-  */
+  * Run: `sbt "runMain graft.Scaling <base> <factor> <dest>"`, at
+  * `local[$SPARK_GRAFT_CPUS]`. SCALING.json and SCALE.md record the
+  * measurements of the retired multi-factor harness that used to live
+  * here. */
 object Scaling {
   /** Key offset between copies — far above any base key (max ~1.5e6 at
-    * sf0.1) and far below Long overflow at 16 copies. */
+    * sf0.1) and far below Long overflow at 64 copies. */
   val KeyShift = 10_000_000_000L
 
-  /** The measured panel: the most expensive batch queries of a Bench
-    * sweep at sf0.1 (streaming sinks excluded — their bounded-fixture
-    * cost is dominated by fixed micro-batch engine overhead, which
-    * scaling sf would mismeasure) plus two cheap representatives as a
-    * linear-scan control group. */
-  val DefaultPanel: Seq[String] = Seq(
-    // dedup family — candidate generation + verify is the 100 TB risk
-    "dedup_containment_prefix", "dedup_jaccard_prefix",
-    "dedup_threshold_sweep", "dedup_banding_sweep",
-    "dedup_minhash_lsh", "dedup_clusters_lsh", "dedup_clusters",
-    "dedup_kcore", "dedup_keep_best", "dedup_incremental",
-    // ANN family — index build + bounded probe
-    "ann_recall_at_k", "ann_topk_ivfpq", "ann_topk_pq", "ann_mmr_rerank",
-    // the shipped past-cap embedding-dedup default + the two r10 audit
-    // queries, first-class rows (VERDICT r10 item 5): the composite
-    // branch IS what embeddingEdgesShared builds past 2.1 M vectors, so
-    // its cost curve must be measured directly, not inferred
-    "dedup_embedding_lsh_composite", "ann_nprobe_sweep", "ann_pq_distortion",
-    // relational — wide agg (Expand ×5 exact vs no-Expand sketch twin)
-    // + self-join basket
-    "rel_column_stats", "rel_column_stats_sketch", "rel_basket_pairs",
-    // linear-scan control group
-    "bigram_probs", "rel_pricing_summary")
-
-  /** One (query, factor) measurement. `sec` < 0 encodes refusal (−2) /
-    * failure (−1). `shufMb` is the per-run shuffle WRITE volume in MiB
-    * (read ≈ write on this one-box topology; −1 = not captured) — the
-    * r8 VERDICT item 4 column: the ×64 box is still memory-resident,
-    * so a plan whose shuffle BYTES grow superlinearly is a 100 TB risk
-    * even while wall time stays flat. `stateRows`/`stateMb` are the
-    * peak state-store footprint for streaming runs (−1 = batch).
-    * `err` (non-null exactly when `sec` < 0) is the exception class +
-    * first message line, persisted as `err_x{F}` in the artifact — a
-    * bare −1.0 whose cause went only to stderr left the committed
-    * artifact unable to distinguish OOM from timeout from
-    * misclassified refusal (VERDICT r10 item 1). `recall` /
-    * `recallRecovered` / `recallEligible` (−1 = not a recall row) are
-    * the result-QUALITY column for the synthetic cap-crossing run
-    * (VERDICT r12 item 3): wall/bytes alone said what the past-cap
-    * branch costs, not whether it still finds the planted twins. */
-  private case class Sample(factor: Int, sec: Double,
-      shufMb: Double = -1.0, stateRows: Long = -1L, stateMb: Double = -1.0,
-      err: String = null, recall: Double = -1.0,
-      recallRecovered: Long = -1L, recallEligible: Long = -1L)
-
-  /** Harness classification of a failed run: −2 when the exception (or
-    * any cause link) is a typed [[GraftRefusal]] — a guard declining
-    * oversized input BY DESIGN — −1 otherwise (OOM, non-convergence,
-    * bug). Matches on the TYPE via [[GraftRefusal.isRefusal]]: the
-    * former `getMessage.contains("refus")` sniff misclassified
-    * Spark-wrapped refusals as errors (`dedup_clusters` ×64 recorded
-    * −1 while ×16 recorded −2 — VERDICT r9 item 6 / r10 item 1). */
-  private[graft] def failureCode(e: Throwable): Double =
-    if (GraftRefusal.isRefusal(e)) -2.0 else -1.0
-
-  /** The diagnostic persisted alongside a failed cell: exception class
-    * + first message line, bounded so artifact lines stay short. */
-  private[graft] def errString(e: Throwable): String = {
-    val m = Option(e.getMessage).getOrElse("").takeWhile(_ != '\n')
-    val s = s"${e.getClass.getSimpleName}: $m"
-    if (s.length > 160) s.take(157) + "..." else s
-  }
-
-  private def jsonEsc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** The streaming slice of the panel (VERDICT r8 item 2): the heaviest
-    * stream queries — the three stateful join shapes plus the
-    * incremental-dedup and vector-ingest stream-static pipelines — run
-    * at every factor up to [[StreamMaxFactor]] (AvailableNow over the
-    * inflated fixtures). Each row records wall seconds AND the peak
-    * state-store rows/bytes from the progress events
-    * ([[graft.streaming.StreamObserver]]) — the watermark-bounded
-    * state curve is the streaming half's 100 TB evidence. */
-  val StreamPanel: Seq[String] = Seq(
-    "events_outer_join_stream", "events_range_join_stream",
-    "events_semi_join_stream", "dedup_incremental_stream",
-    "ann_ingest_stream",
-    // r11: first measurement found the un-dialed media ingest was the
-    // heaviest stream by far (79.6 M state rows at ×32 before the
-    // wide-band dial) — permanent panel member so the dial's state
-    // bound stays pinned
-    "mm_ingest_stream")
-
-  /** Streaming factor ceiling — ×64 since r11 (VERDICT r10 item 4: the
-    * ×16 cutoff left the state-rows exponent fit over two deltas; ×64
-    * confirms the watermark-bounded linear trend on a third point). */
-  val StreamMaxFactor = 64
-
-  /** Factor at and above which a shared-edge build is timed TWICE
-    * (memo + parquet intermediate invalidated between) and the min
-    * kept. Builds run once per factor and memoize, so the min-of-N
-    * storm escape every panel query gets never protected them — one
-    * JIT-deopt storm became the committed number (248.7 s observed vs
-    * 59.3 s committed on `shared_minhash_edges` ×64 in r11 — VERDICT
-    * r11 item 3). Small factors stay single-pass: their builds are
-    * seconds, and storms that size are visible against the exponent
-    * fit anyway. */
-  val BuildDeStormMinFactor = 32
-
-  /** Dup-heavy regime panel factors and membership (VERDICT r11 items
-    * 1 + 7): the text-dedup family re-measured on the PERIOD-26
-    * rotation inflation whose wrapped copies plant ~F²/26 exact
-    * cross-copy twins — the duplicate-laden crawl regime the default
-    * fixed-density (affine) inflation no longer contains. Factors
-    * below 27 are byte-identical across the two regimes, so dup-heavy
-    * rows start at ×32; `shared_prefix_edges` alone continues to ×128
-    * (item 7: one more doubling of the flagship family in the regime
-    * where output itself grows superlinearly — documents-only
-    * inflation, since the embedding rotation caps at ×64 and no
-    * dup-heavy query reads embeddings). */
-  val DupHeavyFactors: Seq[Int] = Seq(32, 64, 128)
-  val DupHeavyMaxFactorFull = 64
-  val DupHeavyPanel: Seq[String] =
-    Seq("shared_prefix_edges", "shared_minhash_edges", "dedup_jaccard_prefix")
-
-  /** Synthetic corpus size (pre-plant) for the composite-cap crossing
-    * row (VERDICT r11 item 4): the dial's past-cap branch
-    * ([[operators.Dedup.LshCompositeCapVectors]] ≈ 2.1 M) is
-    * unreachable by inflation (the ×64 fixture is 128 k vectors), so
-    * one row runs the production entry point on a deterministic
-    * in-memory corpus ABOVE the cap — 4 Mi base vectors + 1/5 planted
-    * near-identical twins ≈ 5.03 M, crossing both the composite cap
-    * and the verify-broadcast cap by actual size. */
-  val SynthCapCrossVectors: Long = 4L * 1024 * 1024
-
-  /** Per-stage decomposition of the AND-composed embedding-edge build
-    * (VERDICT r9 item 2 / r10 item 2): `shared_embedding_edges`' ×64
-    * shuffle bytes fitted superlinear (exp 2.02) on the SHIPPED
-    * past-cap default, and one end-to-end number cannot say which
-    * stage carries the growth. Three nested prefixes of the same
-    * pipeline run as their own rows — signature explode
-    * ([[operators.Dedup.compositeBuckets]]), + occupancy-guarded
-    * candidate join ([[operators.Dedup.lshCandidatesOnBuckets]]),
-    * + exact-cosine verify (the full operator) — so stage cost is the
-    * BYTE/TIME DELTA between consecutive rows. Below
-    * [[operators.Dedup.LshCompositeCapVectors]] the full-build row
-    * measures the per-table dial geometry instead; the stage rows pin
-    * the composite bucketing itself at every factor, bracketing the
-    * cap crossover (×32 = exactly 2.1 M vectors at the sf0.1 base). */
-  val StagePanel: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "composite_stage_signatures" -> ((s, d) =>
-      operators.Dedup.compositeBuckets(Tables.embeddings(s, d))),
-    "composite_stage_candidates" -> ((s, d) =>
-      operators.Dedup.lshCandidatesOnBuckets(
-        operators.Dedup.compositeBuckets(Tables.embeddings(s, d)),
-        operators.Dedup.compositeGeomDesc)),
-    "composite_stage_pairs" -> ((s, d) =>
-      operators.Dedup.embeddingLshPairsComposite(s, d)),
-    // the SAME three prefixes of the per-table path at the corpus'
-    // scaledLshGeometry — what embeddingEdgesShared ACTUALLY builds at
-    // every inflation factor: the fixture corpus tops out at 128 k
-    // vectors (×64), far BELOW the 2.1 M composite cap, so the shared
-    // build's superlinear-looking byte curve (r9-r10's exp ~2) lives on
-    // THIS path and only these rows can name its carrier stage
-    "scaled_stage_signatures" -> ((s, d) =>
-      operators.Dedup.scaledBuckets(s, d)),
-    "scaled_stage_candidates" -> ((s, d) =>
-      operators.Dedup.lshCandidatesOnBuckets(
-        operators.Dedup.scaledBuckets(s, d),
-        operators.Dedup.scaledGeomDesc(s, d))),
-    "scaled_stage_pairs" -> ((s, d) =>
-      operators.Dedup.embeddingLshPairsScaled(s, d)),
-    // the minhash-LSH text-dedup pipeline's prefixes — `dedup_minhash_lsh`
-    // jumped 7.2 → 62.4 s (673 → 3399 MiB) across ×32→×64 in the r11
-    // sweep, and SCALE.md's standing explanation (partial-combine loss
-    // on DISTINCT-style shuffles) deserves the same per-stage proof the
-    // embedding build got: signature agg → band explode → band
-    // self-join candidates → exact-Jaccard verify
-    "minhash_stage_signatures" -> ((s, d) =>
-      operators.Dedup.minhashSignatures(s, d)),
-    "minhash_stage_bands" -> ((s, d) =>
-      operators.Dedup.minhashBands(s, d)),
-    "minhash_stage_candidates" -> ((s, d) =>
-      operators.Dedup.minhashCandidates(s, d)),
-    "minhash_stage_pairs" -> ((s, d) =>
-      operators.Dedup.minhashLsh(s, d)))
-
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SCALING_BASE", "/root/testdata/sf0.1")
-    val scratch = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/tmp/graft_scaling")
-    val factors = sys.env.getOrElse("SPARK_GRAFT_SCALING_FACTORS", "1,4,16")
-      .split(",").map(_.trim.toInt).toSeq
-    // the dup-heavy/synthetic knobs are consumed AFTER the multi-hour
-    // main sweep — parse them eagerly so a malformed value fails here,
-    // not hours in ("" and "0" both read as disabled)
-    val dupHeavyFactors = sys.env.get("SPARK_GRAFT_SCALING_DUPHEAVY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt)
-        .filter(_ > 1).toSeq)
-      .getOrElse(if (factors.max >= 64) DupHeavyFactors else Seq.empty)
-    val synthVectors = sys.env.get("SPARK_GRAFT_SCALING_SYNTH")
-      .map(_.trim).map(v => if (v.isEmpty) 0L else v.toLong)
-      .getOrElse(if (factors.max >= 64) SynthCapCrossVectors else 0L)
-    // composite-table trade-off notches measured alongside the default
-    // cap-crossing row (VERDICT r13 item 4): extra T values for the
-    // OR-amplification dial, each a `composite_cap_crossing_t{T}` row
-    // with wall/bytes/recall at the same synthetic corpus. Default
-    // EMPTY — the rows are a one-shot calibration artifact, not a
-    // per-sweep tax (e.g. SPARK_GRAFT_SCALING_SYNTH_TABLES="12,16").
-    val synthTables = sys.env.get("SPARK_GRAFT_SCALING_SYNTH_TABLES")
-      .map { raw =>
-        val asked = raw.split(",").map(_.trim).filter(_.nonEmpty)
-          .map(_.toInt).toSeq
-        val (ok, dropped) = asked.partition(t => t > 0 &&
-          t * operators.Dedup.CompositeLshArity <=
-            graft.functions.LshBuckets.MaxTables)
-        // no silent caps: a requested notch that cannot run must be
-        // SAID, or the operator believes it was measured (the
-        // harness's own logging discipline)
-        if (dropped.nonEmpty)
-          System.err.println(s"[scaling] WARNING: dropping composite " +
-            s"table notch(es) ${dropped.mkString(",")} - need 0 < T and " +
-            s"T x ${operators.Dedup.CompositeLshArity} <= " +
-            s"LshBuckets.MaxTables (${graft.functions.LshBuckets.MaxTables})")
-        ok
-      }
-      .getOrElse(Seq.empty)
-    val explicitPanel = sys.env.get("SPARK_GRAFT_SCALING_QUERIES")
-      .map(_.split(",").map(_.trim).toSeq)
-    val panel = explicitPanel.getOrElse(DefaultPanel).filterNot(_.endsWith("_stream"))
-    val streamPanel = explicitPanel.getOrElse(StreamPanel)
-      .filter(_.endsWith("_stream"))
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "SCALING.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // At ×64 (38M lineitem rows) 32 shuffle partitions put ~2M rows in
-    // every sort/join buffer × 32 concurrent tasks — the measured OOM
-    // mode of the first ×64 attempt. More partitions = smaller spillable
-    // units; AQE coalesces them back for the small factors.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    require(args.length == 3 && args(1).toIntOption.exists(_ >= 1),
+      "usage: graft.Scaling <base dir> <factor >= 1> <dest dir>")
+    val Array(base, factor, dest) = args
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Graft.builder()
       .master(s"local[$cpus]")
-      .appName("graft-scaling")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      .appName("graft-inflate")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // Untimed JIT/codegen warmup at a tiny sf: without it the FIRST
-    // factor's samples absorb all whole-stage-codegen compilation and
-    // the run reports negative exponents (measured on the sf0.01 ×2
-    // smoke: every exponent < 0 before this phase existed). Min-of-N
-    // passes can't fix the shared builds, which run exactly once per
-    // factor (memoized after), so the code paths must be hot BEFORE x1.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_WARM", "/root/testdata/sf0.001")
-    if (warmDir.nonEmpty) {
-      val t0 = System.nanoTime()
-      for (b <- Seq[() => DataFrame](
-          () => operators.Dedup.nearDupEdgesShared(spark, warmDir),
-          () => operators.Dedup.minhashEdgesShared(spark, warmDir),
-          () => operators.Dedup.embeddingEdgesShared(spark, warmDir),
-          () => operators.Dedup.embeddingEdgesFixedShared(spark, warmDir),
-          () => operators.Dedup.truthPairsShared(spark, warmDir)))
-        try b() catch { case _: Throwable => () }
-      // stage-decomposition prefixes: the composite bucketing's codegen
-      // must be hot before the x1 stage samples, same rationale
-      for ((_, stage) <- StagePanel)
-        try stage(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      // streams included: the FIRST streaming invocation in a JVM pays
-      // ~1.5-1.7 s of micro-batch-planner/state-store/sink JIT (Bench's
-      // measured stream-2pass rationale) — warm it off the x1 samples
-      for (name <- panel ++ streamPanel if SparkEntry.queries.contains(name)) {
-        try SparkEntry.queries(name)(spark, warmDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-      }
-      System.err.println(
-        f"[scaling] warmup at $warmDir done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    // results(query) = samples across factors, in factor order
-    val results = scala.collection.mutable.LinkedHashMap[String, Vector[Sample]]()
-    val rows = scala.collection.mutable.LinkedHashMap[Int, Long]()
-
-    // --- shuffle-volume accounting (VERDICT r8 item 4) ---------------
-    // Stage-level shuffle WRITE bytes, accumulated by a listener; each
-    // pass snapshots the counter around its run. Listener delivery is
-    // async and listenerBus.waitUntilEmpty is private[spark], so the
-    // snapshots poll the counters until stable (the CcJobCountSpec
-    // pattern) — the poll sits OUTSIDE the timed window.
-    val shufWritten = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stagesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) shufWritten.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        stagesSeen.incrementAndGet()
-      }
-    })
-    def quiesce(extra: () => Long = () => 0L): Unit = {
-      def state() = stagesSeen.get() + shufWritten.get() + extra()
-      var n = state()
-      var since = System.nanoTime()
-      while (System.nanoTime() - since < 400L * 1000 * 1000) {
-        Thread.sleep(40)
-        val c = state()
-        if (c != n) { n = c; since = System.nanoTime() }
-      }
-    }
-
-    def emit(): Unit = {
-      def f4(v: Double) =
-        BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-      val qjson = results.map { case (name, samples) =>
-        val pts = samples.map(s => s""""x${s.factor}":${f4(s.sec)}""") ++
-          samples.filter(_.shufMb >= 0).map(s =>
-            s""""shuffle_mb_x${s.factor}":${f4(s.shufMb)}""") ++
-          samples.filter(_.stateRows >= 0).map(s =>
-            s""""state_rows_x${s.factor}":${s.stateRows}""") ++
-          samples.filter(_.stateMb >= 0).map(s =>
-            s""""state_mb_x${s.factor}":${f4(s.stateMb)}""") ++
-          samples.filter(_.recall >= 0).map(s =>
-            s""""recall_x${s.factor}":${f4(s.recall)}""") ++
-          // gate the companion counts on recall >= 0 too: a zero-
-          // eligible measurement (recall = -1) must not ship
-          // recall_pairs/recall_eligible rows without a recall_x row
-          samples.filter(_.recall >= 0).map(s =>
-            s""""recall_pairs_x${s.factor}":${s.recallRecovered}""") ++
-          samples.filter(_.recall >= 0).map(s =>
-            s""""recall_eligible_x${s.factor}":${s.recallEligible}""") ++
-          samples.filter(_.err != null).map(s =>
-            s""""err_x${s.factor}":"${jsonEsc(s.err)}"""")
-        val expo = exponent(samples)
-        val e = expo.map(v => s""","exponent":${f4(v)}""").getOrElse("")
-        // bytes exponents: the scale-risk signal wall time can hide on
-        // a memory-resident box (zero-shuffle/zero-state runs carry no
-        // exponent — nothing to fit)
-        val se = fitExponent(samples.filter(_.shufMb > 0)
-            .map(s => (s.factor, s.shufMb)))
-          .map(v => s""","shuffle_exponent":${f4(v)}""").getOrElse("")
-        val ste = fitExponent(samples.filter(_.stateRows > 0)
-            .map(s => (s.factor, s.stateRows.toDouble)))
-          .map(v => s""","state_rows_exponent":${f4(v)}""").getOrElse("")
-        s""""$name":{${pts.mkString(",")}$e$se$ste}"""
-      }.mkString("{", ",", "}")
-      val rjson = rows.map { case (f, n) => s""""x$f":$n""" }
-        .mkString("{", ",", "}")
-      val line =
-        s"""{"base":"$base","factors":[${factors.mkString(",")}],"lineitem_rows":$rjson,"queries":$qjson}"""
-      try {
-        val p = java.nio.file.Paths.get(out)
-        val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-        java.nio.file.Files.writeString(tmp, line + "\n")
-        java.nio.file.Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch { case e: Exception =>
-        System.err.println(s"[scaling] artifact write failed: ${e.getMessage}")
-      }
-    }
-
-    // one timed pass of an arbitrary frame builder; shuffle bytes
-    // snapshot around it (bytes are plan-deterministic across passes,
-    // so the warm pass's volume stands for the query)
-    def runDfOnce(label: String, factor: Int, f: () => DataFrame): Sample = {
-      spark.catalog.clearCache()
-      quiesce()
-      val mb0 = shufWritten.get()
-      val t0 = System.nanoTime()
-      try {
-        f().write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        quiesce()
-        Sample(factor, sec, shufMb = (shufWritten.get() - mb0) / 1048576.0)
-      } catch { case e: Throwable =>
-        // guarded baselines may REFUSE oversized input by design —
-        // the TYPED refusal (-2) is distinct from an error (-1), and
-        // either way the cause string lands in the artifact
-        val code = failureCode(e)
-        System.err.println(s"[scaling] $label x$factor ${
-          if (code == -2.0) "refused" else "failed"}: ${e.getMessage}")
-        Sample(factor, code, err = errString(e))
-      }
-    }
-
-    def runMeasured(name: String, factor: Int, run: () => Sample): Unit = {
-      val warm = run()
-      val sample =
-        if (warm.sec < 0) warm // refusal/failure: don't retry twice
-        else if (warm.sec > 5.0) { // slow: 2 samples
-          val s2 = run()
-          if (s2.sec >= 0 && s2.sec < warm.sec) warm.copy(sec = s2.sec) else warm
-        } else // fast: 3 samples
-          warm.copy(sec =
-            Seq(warm.sec, run().sec, run().sec).filter(_ >= 0).min)
-      results(name) = results.getOrElse(name, Vector.empty) :+ sample
-      System.err.println(
-        f"[scaling] $name%-28s x$factor%-3d ${sample.sec}%8.3f s  shuffle=${sample.shufMb}%10.1f MiB")
-      emit()
-    }
-
-    // One timed shared-edge build. Builds run ONCE per factor and
-    // memoize, so min-of-N passes can't protect them from a JIT-deopt
-    // storm the way panel queries are protected — an early r11 sweep
-    // read shared_minhash_edges ×64 at 248.7 s where the committed run
-    // read 59.3 s (VERDICT r11 item 3). At factors ≥
-    // [[BuildDeStormMinFactor]] the harness therefore invalidates the
-    // memo (AND the parquet intermediate when SPARK_GRAFT_EDGE_DIR is
-    // set) and rebuilds, keeping the min of the two full builds; the
-    // memo the consumers reuse is the LAST build's, identical content.
-    def timeSharedBuild(rowName: String, dedupKind: String, factor: Int,
-        dir: String, build: () => DataFrame): Unit = {
-      def once(): Sample = {
-        spark.catalog.clearCache()
-        quiesce()
-        val mb0 = shufWritten.get()
-        val t0 = System.nanoTime()
-        try {
-          build()
-          val sec = (System.nanoTime() - t0) / 1e9
-          quiesce()
-          Sample(factor, sec, shufMb = (shufWritten.get() - mb0) / 1048576.0)
-        } catch { case e: Throwable =>
-          System.err.println(s"[scaling] $rowName x$factor ${
-            if (failureCode(e) == -2.0) "refused" else "failed"}: ${e.getMessage}")
-          Sample(factor, failureCode(e), err = errString(e))
-        }
-      }
-      val first = once()
-      val sample =
-        if (first.sec < 0 || factor < BuildDeStormMinFactor) first
-        else {
-          operators.Dedup.invalidateSharedEdges(spark, dir, dedupKind)
-          val second = once()
-          if (second.sec < 0) {
-            // the invalidation already dropped the memo: restore it
-            // UNTIMED, or the next panel consumer silently pays the
-            // full edge rebuild inside its own timed window and its
-            // cell inflates with no err marker (the rebuild failure
-            // itself was logged by once() and the first build's
-            // number stands)
-            try build() catch { case _: Throwable => () }
-            first
-          }
-          else if (second.sec < first.sec) second else first
-        }
-      results(rowName) = results.getOrElse(rowName, Vector.empty) :+ sample
-      System.err.println(
-        f"[scaling] $rowName%-28s x$factor%-3d ${sample.sec}%8.3f s  shuffle=${sample.shufMb}%10.1f MiB (build)")
-      spark.catalog.clearCache()
-      emit()
-    }
-
-    def sharedBuilds(dir: String): Seq[(String, String, () => DataFrame)] = Seq(
-      ("shared_prefix_edges", "prefix",
-        () => operators.Dedup.nearDupEdgesShared(spark, dir)),
-      ("shared_minhash_edges", "minhash",
-        () => operators.Dedup.minhashEdgesShared(spark, dir)),
-      // the DEFAULT build runs the n-adaptive geometry dial (r9);
-      // the fixed-geometry audit variant is the superlinear plan the
-      // r8 artifact measured — kept so the comparison stays measured
-      ("shared_embedding_edges", "embedding",
-        () => operators.Dedup.embeddingEdgesShared(spark, dir)),
-      ("shared_embedding_edges_fixed", "embedding_fixed",
-        () => operators.Dedup.embeddingEdgesFixedShared(spark, dir)),
-      ("shared_truth_pairs", "truth",
-        () => operators.Dedup.truthPairsShared(spark, dir)))
-
-    for (factor <- factors) {
-      val dir = if (factor == 1) base else s"$scratch/x$factor"
-      if (factor != 1) inflate(spark, base, factor, dir)
-      rows(factor) = spark.read.parquet(s"$dir/lineitem.parquet").count()
-      System.err.println(s"[scaling] factor x$factor at $dir: ${rows(factor)} lineitem rows")
-
-      // shared edge graphs: timed builds, then memoized for consumers
-      // (clearCache() does not drop the localCheckpoint memo — Bench's
-      // documented shared-intermediate design)
-      // an explicit SPARK_GRAFT_SCALING_QUERIES list also selects WHICH
-      // shared builds to time (a focused re-measure run merges its rows
-      // into the committed artifact via tools/merge_scaling.py)
-      for ((kind, dedupKind, build) <- sharedBuilds(dir)
-          if explicitPanel.forall(_.contains(kind)))
-        timeSharedBuild(kind, dedupKind, factor, dir, build)
-
-      def runOnce(name: String): Sample =
-        runDfOnce(name, factor, () => SparkEntry.queries(name)(spark, dir))
-
-      // composite-build stage prefixes (see [[StagePanel]]): selected
-      // like the shared builds, so a focused SPARK_GRAFT_SCALING_QUERIES
-      // run can re-measure just these
-      for ((name, stage) <- StagePanel if explicitPanel.forall(_.contains(name)))
-        runMeasured(name, factor, () => runDfOnce(name, factor, () => stage(spark, dir)))
-
-      for (name <- panel if SparkEntry.queries.contains(name))
-        runMeasured(name, factor, () => runOnce(name))
-
-      // ---- streaming rows (VERDICT r8 item 2) ------------------------
-      // AvailableNow streams over the same inflated dir; 2-pass min
-      // (Bench's stream policy), peak state-store rows/bytes from the
-      // progress events of the pass that achieved the min
-      if (factor <= StreamMaxFactor) {
-        import graft.streaming.StreamObserver
-        def streamOnce(name: String): Sample = {
-          spark.catalog.clearCache()
-          quiesce(() => StreamObserver.deliveries)
-          val mb0 = shufWritten.get()
-          StreamObserver.arm()
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(name)(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            quiesce(() => StreamObserver.deliveries)
-            val (srows, sbytes) = StreamObserver.disarm()
-            Sample(factor, sec, (shufWritten.get() - mb0) / 1048576.0,
-              srows, sbytes / 1048576.0)
-          } catch { case e: Throwable =>
-            StreamObserver.disarm()
-            val code = failureCode(e)
-            System.err.println(s"[scaling] $name x$factor ${
-              if (code == -2.0) "refused" else "failed"}: ${e.getMessage}")
-            Sample(factor, code, err = errString(e))
-          }
-        }
-        for (name <- streamPanel if SparkEntry.queries.contains(name)) {
-          val first = streamOnce(name)
-          val best =
-            if (first.sec < 0) first
-            else {
-              val second = streamOnce(name)
-              if (second.sec >= 0 && second.sec < first.sec) second else first
-            }
-          results(name) = results.getOrElse(name, Vector.empty) :+ best
-          System.err.println(
-            f"[scaling] $name%-28s x$factor%-3d ${best.sec}%8.3f s  " +
-              f"state=${best.stateRows}%8d rows/${best.stateMb}%8.2f MiB  " +
-              f"shuffle=${best.shufMb}%8.1f MiB (stream)")
-          emit()
-        }
-      }
-    }
-
-    // ---- dup-heavy text regime (VERDICT r11 items 1 + 7) -------------
-    // The main loop above measures FIXED-DENSITY scaling (affine text
-    // maps, no exact cross-copy twins). This panel re-measures the
-    // text-dedup family on the period-26 rotation inflation — the
-    // duplicate-laden regime where true output grows ~F²/26 — as
-    // `*_dupheavy` rows with their own exponents. Env override:
-    // SPARK_GRAFT_SCALING_DUPHEAVY (comma factors; "" or "0"
-    // disables, parsed eagerly at startup); default runs only when
-    // the main sweep reached ×64 (smoke runs skip it).
-    for (factor <- dupHeavyFactors) {
-      val dir = s"$scratch/dupheavy/x$factor"
-      // documents-only: every dup-heavy query reads documents alone,
-      // and the embedding rotation's ×64 cap would otherwise refuse ×128
-      inflate(spark, base, factor, dir, dupHeavy = true,
-        only = Set("documents"))
-      // past DupHeavyMaxFactorFull only the flagship prefix build runs
-      // by default (the ×128 cells flirt with the single-box ceiling —
-      // the prefix one needed a reduced-parallelism env); an EXPLICIT
-      // SPARK_GRAFT_SCALING_QUERIES request opts any family in, so the
-      // remaining ×128 rows are one focused run, not a default-sweep tax
-      def optedIn(rowName: String) =
-        explicitPanel.exists(_.contains(rowName))
-      for ((kind, dedupKind, build) <- sharedBuilds(dir)
-          if DupHeavyPanel.contains(kind) &&
-            (factor <= DupHeavyMaxFactorFull || kind == "shared_prefix_edges" ||
-              optedIn(s"${kind}_dupheavy")) &&
-            explicitPanel.forall(_.contains(s"${kind}_dupheavy")))
-        timeSharedBuild(s"${kind}_dupheavy", dedupKind, factor, dir, build)
-      for (name <- DupHeavyPanel
-          if SparkEntry.queries.contains(name) &&
-            (factor <= DupHeavyMaxFactorFull || optedIn(s"${name}_dupheavy")) &&
-            explicitPanel.forall(_.contains(s"${name}_dupheavy")))
-        runMeasured(s"${name}_dupheavy", factor, () =>
-          runDfOnce(s"${name}_dupheavy", factor,
-            () => SparkEntry.queries(name)(spark, dir)))
-    }
-
-    // ---- synthetic composite-cap crossing (VERDICT r11 item 4) -------
-    // One row where the geometry dial's past-cap branch (AND-composed
-    // bucketing) is selected BY SIZE: a deterministic synthetic corpus
-    // (xxhash64-generated iid components in [-1, 1) — a sin(i)-based
-    // first cut put every vector on ONE 2-D circle (phase shifts of the
-    // same waveform) and a single SRP bucket swallowed 21% of the
-    // corpus; hash components spread directions uniformly. No parquet
-    // scratch; materialized as localCheckpoint blocks so generation
-    // stays out of the timed window) plus planted near-identical twins
-    // (component vec_id%64 negated, ids offset past the base range),
-    // driven through the PRODUCTION dial entry point. The artifact key
-    // is the equivalent inflation factor vs the sf0.1 embeddings base
-    // (2000 rows). Size knob SPARK_GRAFT_SCALING_SYNTH is parsed
-    // eagerly at startup ("" or "0" disables).
-    if (synthSkipReason(synthVectors, explicitPanel).isEmpty) {
-      val baseVec = spark.range(synthVectors).select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> " +
-          "cast(pmod(xxhash64(id, j), 1048576) / 524288.0 - 1.0 as float))")
-          .as("embedding"))
-      val plants = baseVec
-        .filter(col("vec_id") % operators.Dedup.CompositePlantStride === 0)
-        .select((col("vec_id") + lit(synthVectors)).as("vec_id"),
-          expr("transform(embedding, (x, i) -> " +
-            "IF(i = cast(vec_id % 64 as int), -x, x))").as("embedding"))
-      val corpus = baseVec.unionByName(plants).localCheckpoint()
-      val n = corpus.count()
-      val pastCap = n > operators.Dedup.LshCompositeCapVectors
-      System.err.println(s"[scaling] composite_cap_crossing: n=$n " +
-        s"pastCap=$pastCap verifyBroadcast=${
-          n <= operators.Dedup.VerifyBroadcastMaxVectors} geometry=${
-          if (pastCap) operators.Dedup.compositeGeomDesc
-          else operators.Dedup.scaledGeomDescFor(n)}")
-      val baseN = Tables.embeddings(spark, base).count()
-      val eqFactor = math.max(2, math.round(n.toDouble / baseN).toInt)
-      runMeasured("composite_cap_crossing", eqFactor, () =>
-        runDfOnce("composite_cap_crossing", eqFactor,
-          () => operators.Dedup.embeddingLshPairsScaledOn(corpus, n)))
-      // ---- recall of the planted twins (VERDICT r12 item 3) ----------
-      // The plants exist precisely so quality is measurable at this
-      // size, but runDfOnce records only wall/bytes — count, UNTIMED,
-      // how many of the >=CompositeRecallFloorCosine twins the
-      // AND-composed geometry recovered, against the same declared
-      // floor the fixture-scale spec asserts (SimilaritySpec). A
-      // below-floor number here is the one configuration that will run
-      // at real scale failing its quality contract — flagged loudly.
-      val key = "composite_cap_crossing"
-      if (results.get(key).exists(_.last.sec >= 0)) {
-        val (recovered, eligibleN, recall) = plantedTwinRecall(
-          corpus, operators.Dedup.embeddingLshPairsScaledOn(corpus, n),
-          synthVectors)
-        results(key) = results(key).init :+ results(key).last.copy(
-          recall = recall, recallRecovered = recovered,
-          recallEligible = eligibleN)
-        System.err.println(
-          f"[scaling] $key%-28s x$eqFactor%-3d recall=$recall%.4f " +
-            f"($recovered/$eligibleN twins at cos>=${
-              operators.Dedup.CompositeRecallFloorCosine})" + (
-            // recall = -1 means ZERO eligible twins (nothing measured),
-            // not a floor miss — don't prescribe OR-amplification for it
-            if (recall < 0)
-              " - NO eligible twins at this size; nothing to measure"
-            else if (recall < operators.Dedup.CompositeRecallFloor)
-              f" BELOW declared floor ${operators.Dedup.CompositeRecallFloor} " +
-                "- widen the composite table count (OR-amplification)"
-            else ""))
-        emit()
-      }
-
-      // ---- composite-table trade-off notches (VERDICT r13 item 4) ---
-      // Same synthetic corpus, same recall harness, the
-      // OR-amplification dial at each requested T: one
-      // `composite_cap_crossing_t{T}` row per notch so the shipped
-      // T = 8 operating point (recall 0.5336 vs the 0.5 floor) is a
-      // chosen trade with its neighbors measured, not the only datum.
-      // Planes are index-determined, so every notch's first 8 tables
-      // are bit-identical to the production geometry's.
-      for (t <- synthTables) {
-        val tKey = s"composite_cap_crossing_t$t"
-        System.err.println(s"[scaling] $tKey: n=$n geometry=${
-          operators.Dedup.compositeGeomDescAt(t)}")
-        def tPairs() = operators.Dedup.embeddingLshPairsCompositeAtOn(
-          corpus, t,
-          broadcastVerify = n <= operators.Dedup.VerifyBroadcastMaxVectors)
-        runMeasured(tKey, eqFactor, () => runDfOnce(tKey, eqFactor, tPairs))
-        if (results.get(tKey).exists(_.last.sec >= 0)) {
-          val (recovered, eligibleN, recall) =
-            plantedTwinRecall(corpus, tPairs(), synthVectors)
-          results(tKey) = results(tKey).init :+ results(tKey).last.copy(
-            recall = recall, recallRecovered = recovered,
-            recallEligible = eligibleN)
-          System.err.println(
-            f"[scaling] $tKey%-28s x$eqFactor%-3d recall=$recall%.4f " +
-              f"($recovered/$eligibleN twins at cos>=${
-                operators.Dedup.CompositeRecallFloorCosine})")
-          emit()
-        }
-      }
-    } else if (synthTables.nonEmpty) {
-      // no silent caps (ADVICE r14): the notches were validated at
-      // startup, so without this the user believes the requested T
-      // rows were measured when the whole synth block never ran
-      System.err.println(s"[scaling] WARNING: composite table notch(es) " +
-        s"T=${synthTables.mkString(",")} requested via " +
-        "SPARK_GRAFT_SCALING_SYNTH_TABLES but the synthetic " +
-        "cap-crossing block did NOT run (" +
-        synthSkipReason(synthVectors, explicitPanel).get +
-        ") - the requested notches were NOT measured")
-    }
-
-    emit()
-    spark.stop()
-  }
-
-  /** Why the synthetic cap-crossing block — and with it every
-    * requested `composite_cap_crossing_t{T}` notch — will not run;
-    * None when it runs. The gate and the ADVICE-r14 skip warning share
-    * THIS predicate so they can never disagree (the warning previously
-    * did not exist and validated-but-unrun notches read as measured). */
-  private[graft] def synthSkipReason(synthVectors: Long,
-      explicitPanel: Option[Seq[String]]): Option[String] =
-    if (synthVectors <= 0)
-      Some("synth corpus disabled: set SPARK_GRAFT_SCALING_SYNTH or " +
-        "include a factor >= 64")
-    else if (!explicitPanel.forall(_.contains("composite_cap_crossing")))
-      Some("the explicit SPARK_GRAFT_SCALING_QUERIES panel excludes " +
-        "composite_cap_crossing")
-    else None
-
-  /** Recall of planted near-identical twins in an edge frame, in the
-    * declared-floor regime (VERDICT r12 item 3). `corpus` holds base
-    * vectors plus plants at `vec_id = base + idOffset` (only plant ids
-    * reach `idOffset`, so the twin join needs no stride filter);
-    * `pairs` is an edge frame with `(vec_a, vec_b, cosine)` rows,
-    * vec_a < vec_b. Eligible = twins whose 6dp-ROUNDED cosine is at
-    * least [[operators.Dedup.CompositeRecallFloorCosine]] — 6dp-rounded
-    * because that is what the edge frame's `cosine` column carries, so
-    * recovered and eligible share ONE floor definition (an exact-cosine
-    * eligibility filter would let a boundary twin count as recovered
-    * but not eligible); it is the same regime the fixture-scale floor
-    * spec (`SimilaritySpec`) asserts, so the 5 M-vector measurement and
-    * the unit floor share one definition.
-    * Returns (recovered, eligible, recall); recall is −1 when no twin
-    * is eligible (nothing to measure). Both counts are single
-    * aggregate actions — audit cost, outside any timed window. */
-  private[graft] def plantedTwinRecall(corpus: DataFrame, pairs: DataFrame,
-      idOffset: Long): (Long, Long, Double) = {
-    val floorCos = operators.Dedup.CompositeRecallFloorCosine
-    // BOTH filters apply the floor to the 6dp-ROUNDED cosine — the edge
-    // frame emits round(cos, 6) (Dedup's verify projection), so an
-    // exact-cosine eligibility filter would use a DIFFERENT floor
-    // definition: a twin with true cosine in [0.8999995, 0.9) would
-    // count as recovered but not eligible, biasing recall upward (and
-    // past 1.0 in degenerate corpora)
-    val eligible = corpus.select(col("vec_id"), col("embedding").as("va"))
-      .join(corpus.select((col("vec_id") - lit(idOffset)).as("vec_id"),
-        col("embedding").as("vb")), "vec_id")
-      .filter(round(
-        graft.functions.CosineSimilarity(col("va"), col("vb")), 6)
-        >= floorCos)
-      .count()
-    val recovered = pairs
-      .filter(col("vec_b") === col("vec_a") + lit(idOffset) &&
-        col("cosine") >= floorCos)
-      .count()
-    (recovered, eligible,
-      if (eligible == 0) -1.0 else recovered.toDouble / eligible)
-  }
-
-  /** Least-squares slope of ln(sec) on ln(factor) over valid samples;
-    * None with fewer than two valid points. */
-  def exponent(samples: Seq[Sample]): Option[Double] =
-    fitExponent(samples.filter(_.sec > 0).map(s => (s.factor, s.sec)))
-
-  /** ln-ln least-squares slope over (factor, value) points. */
-  def fitExponent(raw: Seq[(Int, Double)]): Option[Double] = {
-    val pts = raw.filter(_._2 > 0)
-      .map(s => (math.log(s._1.toDouble), math.log(s._2)))
-    if (pts.size < 2) None
-    else {
-      val n = pts.size.toDouble
-      val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
-      val sxx = pts.map(p => p._1 * p._1).sum
-      val sxy = pts.map(p => p._1 * p._2).sum
-      val denom = n * sxx - sx * sx
-      if (denom == 0) None else Some((n * sxy - sx * sy) / denom)
-    }
+    try inflate(spark, base, factor.toInt, dest) finally spark.stop()
   }
 
   /** Slopes of the per-copy affine letter maps — the units of ℤ/26
@@ -853,8 +77,8 @@ object Scaling {
     *   - dup-heavy: the pure Caesar rotation i → (i + k) mod 26, period
     *     26 — factors past 26 repeat rotations and plant ~F²/26 exact
     *     cross-copy twins (30.4 k pairs at ×32, 251 k at ×64), the
-    *     realistic duplicate-laden crawl regime, kept as a LABELED
-    *     variant (`*_dupheavy` artifact rows). */
+    *     realistic duplicate-laden crawl regime behind SCALING.json's
+    *     `*_dupheavy` rows. */
   private[graft] def permAlphabet(alpha: String, k: Int, dupHeavy: Boolean): String =
     if (dupHeavy) alpha.drop(k % 26) + alpha.take(k % 26)
     else {
@@ -867,46 +91,24 @@ object Scaling {
     * offsets). */
   val AffineTextPeriod: Int = AffineSlopes.length * 26
 
-  /** Writes the F-fold key-shifted self-union of the selected tables at
-    * `base` into `dest` (same file layout, so `SparkEntry.queries` run
-    * on it unchanged). Idempotent per (base, factor, mode, tables):
-    * skips when the dest `_INFLATED` marker exists AND records the same
-    * parameters (a marker from a different mode forces a rewrite, so a
-    * reused scratch dir can never serve the wrong regime).
-    *
-    * Text regimes (VERDICT r11 item 1): the default is the
-    * FIXED-DENSITY affine permutation (see [[permAlphabet]] — no exact
-    * cross-copy twins below ×[[AffineTextPeriod]], so text-dedup
-    * exponents measure plan scaling, not output growth). `dupHeavy =
-    * true` keeps the old period-26 Caesar rotation whose wrapped copies
-    * plant ~F²/26 exact twins past ×26 — the dup-heavy crawl regime,
-    * measured separately as `*_dupheavy` rows.
-    *
-    * `only` non-empty restricts inflation to those tables (the
-    * dup-heavy text panel needs ONLY documents, which also lifts the
-    * embedding-rotation factor cap out of its way at ×128). */
-  def inflate(spark: SparkSession, base: String, factor: Int, dest: String,
-      dupHeavy: Boolean = false, only: Set[String] = Set.empty): Unit = {
-    def wanted(t: String) = only.isEmpty || only.contains(t)
+  /** Writes the F-fold key-shifted self-union of the tables at `base`
+    * into `dest` (same file layout, so `SparkEntry.queries` run on it
+    * unchanged), text in the FIXED-DENSITY regime of [[permAlphabet]].
+    * Idempotent per (base, factor): skips when the dest `_INFLATED`
+    * marker exists AND records the same parameters (a marker from
+    * another base or factor forces a rewrite, so a reused scratch dir
+    * can never serve the wrong data). */
+  def inflate(spark: SparkSession, base: String, factor: Int, dest: String): Unit = {
     // the per-copy embedding rotation (below) has only dim = 64 distinct
     // rotations: copy 64 would repeat copy 0's directions verbatim and
     // reintroduce the F² duplicate-pair blowup the rotation exists to
-    // avoid, silently invalidating the measurement (ADVICE r8) — refuse
-    // rather than mismeasure if SPARK_GRAFT_SCALING_FACTORS overreaches
-    require(!wanted("embeddings") || factor <= 64,
+    // avoid, silently invalidating the measurement — refuse rather than
+    // mismeasure
+    require(factor <= 64,
       s"inflate refused: factor $factor > 64 distinct embedding " +
         "rotations (dim 64); copies would repeat directions and the " +
         "near-dup workload would go quadratic in F")
-    require(dupHeavy || factor <= AffineTextPeriod,
-      s"inflate refused: factor $factor > $AffineTextPeriod distinct " +
-        "affine text maps; copies would repeat permutations and plant " +
-        "exact cross-copy twins in the fixed-density regime")
-    if (dupHeavy && factor > 26)
-      System.err.println(s"[scaling] NOTE x$factor dup-heavy: text " +
-        "rotations wrap at 26 - cross-copy exact twins present BY " +
-        "DESIGN (~F^2/26 pairs); rows measure the duplicate-laden regime")
-    val markerLine = s"base=$base factor=$factor dupHeavy=$dupHeavy " +
-      s"tables=${if (only.isEmpty) "all" else only.toSeq.sorted.mkString("+")}\n"
+    val markerLine = s"base=$base factor=$factor\n"
     val marker = java.nio.file.Paths.get(dest, "_INFLATED")
     if (java.nio.file.Files.exists(marker) &&
         java.nio.file.Files.readString(marker) == markerLine) {
@@ -938,8 +140,8 @@ object Scaling {
         shift(d, k, "doc_id").withColumn("text",
           if (k == 0) col("text")
           else translate(col("text"), lower + upper,
-            permAlphabet(lower, k, dupHeavy) +
-              permAlphabet(upper, k, dupHeavy)))
+            permAlphabet(lower, k, dupHeavy = false) +
+              permAlphabet(upper, k, dupHeavy = false)))
       }),
       "embeddings" -> (df => copies(df) { (d, k) =>
         val r = k % 64 // dim = 64; copy 0 is the identity rotation
@@ -948,7 +150,7 @@ object Scaling {
           else expr(s"concat(slice(embedding, ${r + 1}, 64 - $r), slice(embedding, 1, $r))")
             .cast("array<float>"))
       }))
-    for ((name, xform) <- tables if wanted(name)) {
+    for ((name, xform) <- tables) {
       // events ships TIMESTAMP(NANOS) in some generations: route through
       // Tables loaders so the normalized schema lands in the scratch copy
       val src = name match {

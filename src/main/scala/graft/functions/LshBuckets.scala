@@ -76,10 +76,9 @@ object LshBuckets {
                // to the constructor — Dedup.embeddingLshPairsWide)
   val MaxTables = 32 // 8 → 16 in r13 (the AND-composed dedup branch
                      // draws CompositeLshTables(8) × arity(2) base
-                     // signatures); 16 → 32 in r14 so the Scaling
-                     // harness can measure the T = 12/16 composite
-                     // trade-off rows (24/32 base signatures —
-                     // Dedup.compositeBucketsAt). Per-table paths stay
+                     // signatures); 16 → 32 in r14 for composite
+                     // trade-off rows at T = 12/16 (24/32 base
+                     // signatures, SCALING.json). Per-table paths stay
                      // ≤ 8 (WideLshTables). Plane (t, b, d) values are
                      // index-determined (md5), so widening the maxima
                      // leaves every existing table's planes identical

@@ -226,11 +226,8 @@ object Dedup {
   // 3. MinHash + LSH
   // ------------------------------------------------------------------
 
-  /** doc_id → K minhash columns mh0..mhK-1 over word-3-shingles. */
-  def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    minhashSignaturesOn(shingles(s, d))
-
-  /** [[minhashSignatures]] over any (doc_id, s) shingle frame. */
+  /** doc_id → K minhash columns mh0..mhK-1 over any (doc_id, s)
+    * word-3-shingle frame. */
   private[graft] def minhashSignaturesOn(sh: DataFrame): DataFrame = {
     import MinHashParams._
     val h = sh.select(col("doc_id"), (md5hash60(col("s")) % P).as("hv"))
@@ -247,12 +244,6 @@ object Dedup {
     * bucket occupancy, never all-pairs. */
   def minhashCandidates(s: SparkSession, d: String): DataFrame =
     minhashCandidatesOn(shingles(s, d))
-
-  /** The default-geometry band frame over the corpus — stage 2 of
-    * [[minhashLsh]], exposed for the Scaling stage decomposition
-    * (the `minhash_stage_*` rows). */
-  private[graft] def minhashBands(s: SparkSession, d: String): DataFrame =
-    minhashBandsOn(shingles(s, d))
 
   /** doc_id → (band, bkey) LSH band keys from the minhash signatures —
     * the shared band frame for the symmetric ([[minhashCandidatesOn]])
@@ -991,18 +982,12 @@ object Dedup {
           .as(Seq("t", "bucket"))),
       s"$tables x $bits", broadcastVerify)
 
-  /** Candidate-join + exact-cosine verify over a prepared
-    * `(vec_id, t, bucket)` frame — shared by the per-table
-    * ([[embeddingLshPairsOn]]) and AND-composed
+  /** Guarded candidate stage of [[embeddingLshPairsOnBuckets]]: the
+    * bucket equi-join over a prepared `(vec_id, t, bucket)` frame —
+    * shared by the per-table ([[embeddingLshPairsOn]]) and AND-composed
     * ([[embeddingLshPairsCompositeOn]]) bucketings. The occupancy
     * guard is a scalar pre-aggregate (one row to the driver), never a
     * data-path collect. */
-  /** Guarded candidate stage of [[embeddingLshPairsOnBuckets]] —
-    * exposed (private[graft]) so the Scaling harness can measure the
-    * candidate join's shuffle bytes SEPARATELY from the signature
-    * explode and the verify join (VERDICT r9 item 2: the composite
-    * build's ×64 bytes need a per-stage decomposition, not one
-    * end-to-end number). */
   private[graft] def lshCandidatesOnBuckets(
       b: DataFrame, geomDesc: String): DataFrame = {
     val occRow = b.groupBy("t", "bucket").agg(count(lit(1)).as("n"))
@@ -1178,7 +1163,7 @@ object Dedup {
     * true cosine is at least [[CompositeRecallFloorCosine]], the
     * [[CompositeLshTables]] composite tables must recover at
     * least this fraction (asserted by `SimilaritySpec` at fixture
-    * scale AND measured at 5 M vectors by the Scaling harness's
+    * scale AND measured at 5 M vectors in SCALING.json's
     * `recall_x{F}` column, which caught the 4-table geometry at 0.414
     * — the r13 widening to 8). The recovery dial is
     * OR-amplification: each extra composite table is an independent
@@ -1223,80 +1208,30 @@ object Dedup {
         n + n / CompositePlantStride <= VerifyBroadcastMaxVectors)
   }
 
-  /** The AND-composed (vec_id, t, bucket) signature frame — stage 1 of
-    * [[embeddingLshPairsCompositeOn]], exposed for the Scaling stage
-    * decomposition (VERDICT r9 item 2). */
-  private[graft] def compositeBuckets(e: DataFrame): DataFrame =
-    compositeBucketsAt(e, CompositeLshTables)
-
-  /** [[compositeBuckets]] at an arbitrary composite-table count — the
-    * OR-amplification dial as a parameter, for the Scaling harness's
-    * recall/cost trade-off rows (VERDICT r13 item 4: the shipped
-    * T = 8 operating point measured 0.5336 recall against the 0.5
-    * floor with a 6.7% margin; T = 12/16 are the next notches,
-    * expected ~0.66/~0.74 by 1−(1−p^32)^T). Plane weights are
-    * index-determined (md5 of (t, b, d) — [[graft.functions.LshBuckets]]),
-    * so table k's planes are IDENTICAL at every T: widening only adds
-    * tables, never perturbs existing buckets — the same property the
-    * r13 4→8 widening relied on to keep every oracle result
-    * byte-identical. Production paths always pass
-    * [[CompositeLshTables]]. */
-  private[graft] def compositeBucketsAt(e: DataFrame, tables: Int): DataFrame = {
+  /** The AND-composed (vec_id, t, bucket) signature frame of
+    * [[embeddingLshPairsCompositeOn]]: [[CompositeLshTables]] composite
+    * tables over twice as many base tables at the bits cap. Plane
+    * weights are index-determined (md5 of (t, b, d) —
+    * [[graft.functions.LshBuckets]]), so table k's planes are the same
+    * at every table count: widening only adds tables and never
+    * perturbs an existing bucket — the property the r13 4→8 widening
+    * relied on to keep every oracle result byte-identical. */
+  private[graft] def compositeBuckets(e: DataFrame): DataFrame = {
     import graft.functions.LshBuckets.MaxBits
-    val baseTables = tables * CompositeLshArity
-    e.withColumn("bkts",
-        graft.functions.LshBuckets(col("embedding"), baseTables, MaxBits))
+    e.withColumn("bkts", graft.functions.LshBuckets(col("embedding"),
+        CompositeLshTables * CompositeLshArity, MaxBits))
       .select(col("vec_id"),
-        posexplode(array((0 until tables).map { k =>
+        posexplode(array((0 until CompositeLshTables).map { k =>
           expr(s"shiftleft(element_at(bkts, ${2 * k + 1}), $MaxBits) + " +
             s"element_at(bkts, ${2 * k + 2})")
         }: _*)).as(Seq("t", "bucket")))
   }
 
-  private[graft] def compositeGeomDesc: String =
-    compositeGeomDescAt(CompositeLshTables)
-
-  private[graft] def compositeGeomDescAt(tables: Int): String = {
-    import graft.functions.LshBuckets.MaxBits
-    s"$tables composite tables of ${CompositeLshArity}x$MaxBits bits"
-  }
-
   private def embeddingLshPairsCompositeOn(e: DataFrame,
       broadcastVerify: Boolean = false): DataFrame =
-    embeddingLshPairsCompositeAtOn(e, CompositeLshTables, broadcastVerify)
-
-  /** The composite pipeline at an arbitrary table count — Scaling
-    * trade-off rows only (see [[compositeBucketsAt]]). */
-  private[graft] def embeddingLshPairsCompositeAtOn(e: DataFrame,
-      tables: Int, broadcastVerify: Boolean): DataFrame =
-    embeddingLshPairsOnBuckets(e, compositeBucketsAt(e, tables),
-      compositeGeomDescAt(tables), broadcastVerify)
-
-  /** The per-table `(vec_id, t, bucket)` signature frame at the
-    * corpus' [[scaledLshGeometry]] — stage 1 of
-    * [[embeddingLshPairsScaled]] BELOW the composite cap, exposed for
-    * the Scaling stage decomposition. The r9-r10 scaling artifacts
-    * fitted `shared_embedding_edges`' shuffle bytes superlinear
-    * (exp 2.0-2.3) with a single end-to-end number per factor; these
-    * stage prefixes split that volume into signature explode vs
-    * candidate join vs verify so the regime step (the candidate join's
-    * broadcast→shuffle demotion as the signature frame outgrows the
-    * 10 MB threshold) is measured, not conjectured. */
-  private[graft] def scaledBuckets(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val (t, b) = scaledLshGeometry(embeddingCorpusCount(s, d))
-    e.select(col("vec_id"),
-      posexplode(graft.functions.LshBuckets(col("embedding"), t, b))
-        .as(Seq("t", "bucket")))
-  }
-
-  private[graft] def scaledGeomDesc(s: SparkSession, d: String): String =
-    scaledGeomDescFor(embeddingCorpusCount(s, d))
-
-  private[graft] def scaledGeomDescFor(n: Long): String = {
-    val (t, b) = scaledLshGeometry(n)
-    s"scaled $t x $b"
-  }
+    embeddingLshPairsOnBuckets(e, compositeBuckets(e),
+      s"$CompositeLshTables composite tables of ${CompositeLshArity}x" +
+        s"${graft.functions.LshBuckets.MaxBits} bits", broadcastVerify)
 
   /** [[embeddingLshPairs]] at the [[scaledLshGeometry]] for the corpus'
     * actual size — the production default (and since r9 what
@@ -1315,12 +1250,12 @@ object Dedup {
 
   /** [[embeddingLshPairsScaled]] over an arbitrary (vec_id, embedding)
     * frame of known size n — the dial itself, split from the
-    * corpus-dir loader so the Scaling harness can drive the past-cap
-    * branch on a synthetic corpus LARGER than any inflation fixture
-    * reaches (the ×64 fixture tops out at 128 k vectors; the composite
-    * cap sits at ~2.1 M — VERDICT r11 item 4). Every branch decision
-    * (composite switch, verify-broadcast hint) fires on the PASSED n,
-    * exactly as the production entry point. */
+    * corpus-dir loader so a spec can drive the past-cap branch on a
+    * synthetic corpus LARGER than any inflation fixture reaches (the
+    * ×64 fixture tops out at 128 k vectors; the composite cap sits at
+    * ~2.1 M). Every branch decision (composite switch, verify-broadcast
+    * hint) fires on the PASSED n, exactly as the production entry
+    * point. */
   private[graft] def embeddingLshPairsScaledOn(
       e: DataFrame, n: Long): DataFrame =
     if (n > LshCompositeCapVectors)
@@ -1649,29 +1584,6 @@ object Dedup {
         case None       => build.localCheckpoint()
       })
 
-  /** Drops one (session, corpus, kind) edge memo AND its materialized
-    * parquet intermediate (when [[edgeScratchDir]] is set), so the next
-    * [[sharedEdges]] call pays the FULL build again. Measurement
-    * harness hook (VERDICT r11 item 3): shared builds run exactly once
-    * per factor and memoize, so a single JIT-deopt storm becomes the
-    * committed number with no min-of-N escape — the Scaling harness
-    * invalidates and rebuilds at the big factors and keeps the min.
-    * Never a production call: consumers WANT the memo. */
-  private[graft] def invalidateSharedEdges(
-      s: SparkSession, d: String, kind: String): Unit = {
-    // unpersist the dropped memo's localCheckpoint blocks (no-op for
-    // the parquet-reader memo of EDGE_DIR mode): without this, the
-    // first build's blocks stay resident through the deliberately
-    // memory-heavy rebuild until the ContextCleaner's next sweep
-    Option(sharedEdgeCache.remove((s, d, kind)))
-      .foreach(org.apache.spark.sql.graftshim.unpersistLocalCheckpoint(_))
-    edgeScratchDir.foreach { root =>
-      val p = new org.apache.hadoop.fs.Path(edgePath(root, d, kind))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
-
   /** Parquet-intermediate path for one (corpus, kind) edge graph. */
   private def edgePath(root: String, d: String, kind: String): String = {
     val dirHash = java.security.MessageDigest.getInstance("MD5")
@@ -1789,15 +1701,6 @@ object Dedup {
   def embeddingEdgesShared(s: SparkSession, d: String): DataFrame =
     sharedEdges(s, d, "embedding")(
       embeddingLshPairsScaled(s, d).select(col("vec_a").as("a"),
-        col("vec_b").as("b")))
-
-  /** [[embeddingEdgesShared]] at the FIXED default geometry — retained
-    * as the AUDIT variant the Scaling harness measures against the
-    * dial (the pair SCALING.json compares: fixed exp 1.12 vs scaled
-    * 0.76 at ×64). Never on a production path. */
-  def embeddingEdgesFixedShared(s: SparkSession, d: String): DataFrame =
-    sharedEdges(s, d, "embedding_fixed")(
-      embeddingLshPairs(s, d).select(col("vec_a").as("a"),
         col("vec_b").as("b")))
 
   /** Corpus-size guard for [[nearDupClusters]]: EXACT clustering at the
@@ -2498,10 +2401,11 @@ object Dedup {
     while (curEdges != prevEdges) {
       // a plain require, NOT a GraftRefusal: non-convergence is an
       // algorithmic iteration-limit failure, not an input-size scale
-      // guard — typing it as a refusal would let the Scaling harness
-      // record a real scaling regression as by-design (-2) instead of
-      // error (-1) (ADVICE r10). GraftRefusal stays reserved for the
-      // documented occupancy/domain/cardinality guards.
+      // guard — typing it as a refusal would let a caller that
+      // classifies failures by GraftRefusal.isRefusal record a real
+      // scaling regression as by-design (ADVICE r10). GraftRefusal
+      // stays reserved for the documented occupancy/domain/cardinality
+      // guards.
       require(rounds < KcoreMaxRounds,
         s"kcore did not converge in $KcoreMaxRounds peel rounds - raise " +
           "KcoreMaxRounds (and unroll the oracle to match)")

@@ -159,8 +159,8 @@ object EventStream {
     * `events.parquet` plus the brace-alternation of "" and "/&#42;" —
     * that matches both corpus layouts: the
     * fixture's single flat file AND the part files inside a
-    * Spark-written directory (e.g. the Scaling harness' inflated
-    * scratch). The former `pathGlobFilter` over the parent dir matched
+    * Spark-written directory (e.g. a `Scaling.inflate` output). The
+    * former `pathGlobFilter` over the parent dir matched
     * only the flat-file layout (the filter tests LEAF file names, and
     * a directory's `part-*` members never match `events.parquet`), and
     * a direct non-glob file path trips FileStreamSource's
@@ -749,9 +749,9 @@ object EventStream {
     // shift every date_format'd window label; inherit it explicitly
     ss.conf.set("spark.sql.session.timeZone",
       s.conf.get("spark.sql.session.timeZone"))
-    // harness observability: every driver-surface stream reports its
-    // per-batch state-store footprint through the shared observer (a
-    // no-op unless a harness armed it — see [[StreamObserver]])
+    // every driver-surface stream reports its per-batch state-store
+    // footprint through the shared observer (a no-op unless armed: the
+    // benchmark's traced event_stream runs arm it — see [[StreamObserver]])
     ss.streams.addListener(StreamObserver)
     ss
   }

@@ -24,21 +24,6 @@ package object graftshim {
   def sqlCacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
 
-  /** Unpersist the block-manager blocks behind a `localCheckpoint()`ed
-    * frame (its analyzed plan is a `LogicalRDD` over the checkpointed
-    * RDD). Returns false — a no-op — for any other plan shape (e.g. a
-    * parquet-reader frame), so callers can pass whatever a memo held.
-    * Needed by `Dedup.invalidateSharedEdges`: dropping the memo
-    * reference alone leaves the checkpoint blocks resident until the
-    * ContextCleaner's next GC-driven sweep, which during a
-    * deliberately-timed full rebuild at the biggest factors is
-    * avoidable block-manager pressure. */
-  def unpersistLocalCheckpoint(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); true
-      case _ => false
-    }
-
   /** One frame of `spark` over the union of `localCheckpoint()`ed frames,
     * which may belong to other sessions of the same context (the
     * micro-batches of a streaming query's cloned session): a single
@@ -53,16 +38,4 @@ package object graftshim {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(spark.sparkContext.union(rdds), parts.head.schema)
   }
-
-  /** The id of the persisted RDD behind a `localCheckpoint()`ed frame
-    * (None for any other plan shape). For specs that assert the memo's
-    * SPECIFIC blocks were freed: comparing absolute
-    * `getPersistentRDDs.size` deltas on a suite-shared context is
-    * flaky — the ContextCleaner asynchronously unpersists GC'd RDDs
-    * from earlier tests between the two reads (ADVICE r12). */
-  def localCheckpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => Some(lr.rdd.id)
-      case _ => None
-    }
 }

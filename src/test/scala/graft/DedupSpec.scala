@@ -295,83 +295,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("invalidateSharedEdges drops memo, parquet intermediate, and checkpoint blocks") {
-    // Scaling's de-storm pass (VERDICT r11 item 3) relies on this hook
-    // forcing a genuinely FULL second build: the memo must go, the
-    // write-once parquet must go, and the dropped memo's
-    // localCheckpoint blocks must be unpersisted immediately (r12
-    // hardening) rather than held through the memory-heavy rebuild.
-    val sc = spark.sparkContext
-
-    // memo mode (no scratch dir): invalidation unpersists the blocks
-    val before = Dedup.edgeScratchDir
-    Dedup.edgeScratchDir = None
-    try {
-      val ss = spark.newSession()
-      val memo = Dedup.minhashEdgesShared(ss, d)
-      val n1 = memo.count()
-      // assert on the memo's SPECIFIC checkpoint RDD id, not a global
-      // size delta: the suite-shared context's ContextCleaner can
-      // asynchronously unpersist GC'd RDDs from earlier tests between
-      // two size reads (ADVICE r12)
-      val memoId = org.apache.spark.sql.graftshim.localCheckpointRddId(memo)
-        .getOrElse(fail("memo-mode edge frame is not a localCheckpoint"))
-      assert(sc.getPersistentRDDs.contains(memoId),
-        "memo's checkpoint blocks not registered as persistent")
-      Dedup.invalidateSharedEdges(ss, d, "minhash")
-      assert(!sc.getPersistentRDDs.contains(memoId),
-        "invalidation must unpersist the memo's checkpoint blocks")
-      assert(Dedup.minhashEdgesShared(ss, d).count() === n1,
-        "rebuild after invalidation must reproduce the edge graph")
-    } finally {
-      Dedup.edgeScratchDir = before
-      spark.catalog.clearCache()
-    }
-
-    // scratch-dir mode: invalidation deletes the parquet intermediate
-    // (whose memo is a reader frame — unpersist is a typed no-op)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-edge-invalidate").toString
-    try {
-      Dedup.edgeScratchDir = Some(tmp)
-      val ss = spark.newSession()
-      val n1 = Dedup.minhashEdgesShared(ss, d).count()
-      val edgeDir = new java.io.File(tmp).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("edges_minhash_"))
-      assert(edgeDir.length === 1)
-      Dedup.invalidateSharedEdges(ss, d, "minhash")
-      assert(!edgeDir.head.exists(),
-        "invalidation must delete the parquet intermediate")
-      assert(Dedup.minhashEdgesShared(ss, d).count() === n1)
-      assert(new java.io.File(edgeDir.head, "_SUCCESS").exists(),
-        "rebuild must rewrite a complete intermediate")
-    } finally {
-      Dedup.edgeScratchDir = before
-      spark.catalog.clearCache()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
-  }
-
-  test("unpersistLocalCheckpoint frees exactly the checkpointed RDD; no-op otherwise") {
-    import org.apache.spark.sql.graftshim
-    val sc = spark.sparkContext
-    // assert on the SPECIFIC checkpoint RDD id, never on absolute
-    // getPersistentRDDs.size deltas: the suite-shared context's
-    // ContextCleaner asynchronously unpersists GC'd RDDs from earlier
-    // tests between reads (ADVICE r12 — the exact flake this test
-    // shipped once, 12 != 16)
-    val df = spark.range(100).toDF("id").localCheckpoint()
-    val id = graftshim.localCheckpointRddId(df)
-      .getOrElse(fail("localCheckpoint frame did not expose its RDD id"))
-    assert(sc.getPersistentRDDs.contains(id))
-    assert(graftshim.unpersistLocalCheckpoint(df))
-    assert(!sc.getPersistentRDDs.contains(id))
-    // any non-LogicalRDD plan (e.g. a parquet reader) is a typed no-op
-    val reader = spark.read.parquet(s"$d/documents.parquet")
-    assert(graftshim.localCheckpointRddId(reader).isEmpty)
-    assert(!graftshim.unpersistLocalCheckpoint(reader))
-  }
-
   test("a partial edge intermediate without _SUCCESS is rebuilt, not served") {
     // ADVICE r6: a crashed writer leaves a directory with part files but
     // no _SUCCESS marker — serving it would silently hand a truncated
@@ -937,11 +860,23 @@ class DedupSpec extends AnyFunSuite {
       expr("transform(sequence(0, 31), j -> " +
         "cast(pmod(xxhash64(id, j), 1048576) / 524288.0 - 1.0 as float))")
         .as("embedding"))
-    def buckets(tables: Int): Set[(Long, Int, Long)] =
-      Dedup.compositeBucketsAt(e, tables).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    // the composed keys at any table count T, laid out the way
+    // Dedup.compositeBuckets lays them out at CompositeLshTables
+    def buckets(tables: Int): Set[(Long, Int, Long)] = rows(
+      e.withColumn("bkts", LshBuckets(col("embedding"),
+          tables * Dedup.CompositeLshArity, LshBuckets.MaxBits))
+        .select(col("vec_id"),
+          posexplode(array((0 until tables).map { k =>
+            expr(s"shiftleft(element_at(bkts, ${2 * k + 1}), " +
+              s"${LshBuckets.MaxBits}) + element_at(bkts, ${2 * k + 2})")
+          }: _*)).as(Seq("t", "bucket"))))
+    val production = rows(Dedup.compositeBuckets(e))
+    assert(buckets(Dedup.CompositeLshTables) === production,
+      "the composed key layout drifted from Dedup.compositeBuckets")
     val at16 = buckets(16) // 16 × arity(2) = 32 base tables = MaxTables
-    assert(buckets(8) === at16.filter(_._2 < 8),
+    assert(production === at16.filter(_._2 < 8),
       "widening T must only ADD tables — the t<8 buckets moved")
     assert(at16.count(_._2 >= 8) === at16.count(_._2 < 8),
       "T=16 must contribute one row per vector for each added table")

@@ -7,7 +7,8 @@ import graft.operators.TextPipeline
 import graft.sources.{ReferenceSink, WordListSource}
 
 /** Grounds the engine on the reference's ACTUAL workload: the full
-  * 354,984-line corpus `/root/reference/354984si.ngl` (the file behind
+  * 354,984-line corpus `354984si.ngl` under `SPARK_GRAFT_REFERENCE_DIR`
+  * (the file behind
   * every published timing in the reference README, `README.md:25-44`,
   * and the `Read 354913 lines` counter at `mapreduce.erl:168`), plus
   * the split-phase 26-way partitioned sink (`mapreduce.erl:158-185`).
@@ -18,8 +19,8 @@ import graft.sources.{ReferenceSink, WordListSource}
 class ReferenceCorpusSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private val corpus = "/root/reference/354984si.ngl"
-  private val testNgl = "/root/reference/test.ngl"
+  private def corpus = TestSpark.referenceFile("354984si.ngl")
+  private def testNgl = TestSpark.referenceFile("test.ngl")
 
   test("full corpus: split-phase filter keeps exactly 354,913 words") {
     // the reference logs `Read 354913 lines` after its filter
@@ -32,18 +33,17 @@ class ReferenceCorpusSpec extends AnyFunSuite {
   test("corpus-swap pin: the bench env default reads exactly 354,984 " +
       "words (the reference_corpus_words artifact field)") {
     // Bench's same-data baseline cells (bigram_reference_corpus*) read
-    // SPARK_GRAFT_REFERENCE_CORPUS with this default and emit the raw
-    // word count as reference_corpus_words next to the two timings
-    // (VERDICT r15 item 3). This pin resolves the SAME env var, so an
-    // override to a tiny fixture — which would silently ship a
-    // flattering wall time — fails here instead. The file is
-    // newline-terminated, so quirk mode drops nothing: raw count =
-    // line count = 354,984 (the filter's 354,913 survivors are pinned
-    // in the test above).
-    val path = sys.env.getOrElse("SPARK_GRAFT_REFERENCE_CORPUS", corpus)
-    assert(WordListSource.read(spark, path, referenceQuirk = true)
+    // Bench.referenceFile("354984si.ngl") and emit the raw word count
+    // as reference_corpus_words next to the two timings (VERDICT r15
+    // item 3). This pin resolves the SAME path, so a
+    // SPARK_GRAFT_REFERENCE_DIR holding a tiny fixture — which would
+    // silently ship a flattering wall time — fails here instead. The
+    // file is newline-terminated, so quirk mode drops nothing: raw
+    // count = line count = 354,984 (the filter's 354,913 survivors are
+    // pinned in the test above).
+    assert(WordListSource.read(spark, corpus, referenceQuirk = true)
       .count() === 354984L,
-      s"corpus at $path is not the reference's 354,984-word file — the " +
+      s"corpus at $corpus is not the reference's 354,984-word file — the " +
         "bigram_reference_corpus bench rows would not be a same-data " +
         "baseline")
   }

@@ -716,8 +716,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("the geometry dial branches on the PASSED corpus size: past-cap " +
       "selects AND-composed bucketing and drops the broadcast hint") {
     import graft.operators.Dedup
-    // the Scaling harness drives this entry point with a synthetic
-    // >cap corpus (composite_cap_crossing row) — pin structurally that
+    // SCALING.json's composite_cap_crossing row drove this entry point
+    // with a synthetic >cap corpus — pin structurally that
     // the dial's selection is a function of n, not of fixture identity:
     // the AND-composed key construction (shiftleft composition) only
     // appears past LshCompositeCapVectors, and the verify-broadcast

@@ -15,4 +15,15 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** [[Bench.referenceFile]], failing the calling test with the setting
+    * and the path named when the file is missing (Spark's own error is a
+    * bare `PATH_NOT_FOUND`). */
+  def referenceFile(name: String): String = {
+    val p = Bench.referenceFile(name)
+    if (!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(p)))
+      org.scalatest.Assertions.fail(s"reference file $p not found: set " +
+        "SPARK_GRAFT_REFERENCE_DIR to the directory that holds it")
+    p
+  }
 }

@@ -16,7 +16,8 @@ class TextPipelineSpec extends AnyFunSuite {
   private val sf0001 = "/root/testdata/sf0.001"
 
   private def testNglWords = // reference quirk drops unterminated `spirit`
-    WordListSource.read(spark, "/root/reference/test.ngl", referenceQuirk = true)
+    WordListSource.read(spark, TestSpark.referenceFile("test.ngl"),
+      referenceQuirk = true)
 
   test("test.ngl golden: 78 distinct bigrams, 128 occurrences (main semantics)") {
     val counts = TextPipeline.freqTable(
@@ -40,7 +41,7 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("quirk off keeps the unterminated final word `spirit`") {
-    val raw = WordListSource.read(spark, "/root/reference/test.ngl")
+    val raw = WordListSource.read(spark, TestSpark.referenceFile("test.ngl"))
     assert(raw.count() === 33L)
     assert(raw.filter($"w" === "spirit").count() === 1L)
   }
