@@ -38,9 +38,21 @@ import org.apache.spark.sql.functions._
   * measurements of the retired multi-factor harness that used to live
   * here. */
 object Scaling {
-  /** Key offset between copies — far above any base key (max ~1.5e6 at
-    * sf0.1) and far below Long overflow at 64 copies. */
-  val KeyShift = 10_000_000_000L
+  /** Key offset between copies, 2²⁶: above every base key (max ~1.5e6 at
+    * sf0.1; [[inflate]] requires it), and 63·2²⁶ + a base key stays below
+    * 2³² at the 64-copy cap, so inflated ids fit the guards that need ids
+    * under 2³² (`lpaCommunities`' tie key) and the packed `cents·10¹⁰ + key`
+    * tie keys in `Relational`. */
+  val KeyShift: Long = 1L << 26
+
+  /** The join-key columns each fact table's copies shift by
+    * `copy * KeyShift`; tables not named here are copied once. */
+  private[graft] val ShiftedKeys: Seq[(String, Seq[String])] = Seq(
+    "customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"), "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events" -> Seq("event_id", "user_id"), "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3 && args(1).toIntOption.exists(_ >= 1),
@@ -94,10 +106,11 @@ object Scaling {
   /** Writes the F-fold key-shifted self-union of the tables at `base`
     * into `dest` (same file layout, so `SparkEntry.queries` run on it
     * unchanged), text in the FIXED-DENSITY regime of [[permAlphabet]].
-    * Idempotent per (base, factor): skips when the dest `_INFLATED`
-    * marker exists AND records the same parameters (a marker from
-    * another base or factor forces a rewrite, so a reused scratch dir
-    * can never serve the wrong data). */
+    * Refuses a base whose [[ShiftedKeys]] fall outside [0, KeyShift).
+    * Idempotent per (base, factor, KeyShift): skips when the dest
+    * `_INFLATED` marker exists AND records the same parameters (a marker
+    * from another base, factor or shift forces a rewrite, so a reused
+    * scratch dir can never serve the wrong data). */
   def inflate(spark: SparkSession, base: String, factor: Int, dest: String): Unit = {
     // the per-copy embedding rotation (below) has only dim = 64 distinct
     // rotations: copy 64 would repeat copy 0's directions verbatim and
@@ -108,7 +121,7 @@ object Scaling {
       s"inflate refused: factor $factor > 64 distinct embedding " +
         "rotations (dim 64); copies would repeat directions and the " +
         "near-dup workload would go quadratic in F")
-    val markerLine = s"base=$base factor=$factor\n"
+    val markerLine = s"base=$base factor=$factor keyShift=$KeyShift\n"
     val marker = java.nio.file.Paths.get(dest, "_INFLATED")
     if (java.nio.file.Files.exists(marker) &&
         java.nio.file.Files.readString(marker) == markerLine) {
@@ -119,45 +132,37 @@ object Scaling {
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase
 
-    /** F copies of `df`, transformed per copy index. */
-    def copies(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until factor).map(k => f(df, k)).reduce(_ unionAll _)
+    /** Copy `k`'s non-key columns; copy 0 is the base table. */
+    def recast(name: String, d: DataFrame, k: Int): DataFrame = name match {
+      case "documents" if k > 0 => d.withColumn("text", translate(col("text"),
+        lower + upper, permAlphabet(lower, k, dupHeavy = false) +
+          permAlphabet(upper, k, dupHeavy = false)))
+      case "embeddings" if k > 0 => // dim = 64 > k: rotate by k positions
+        d.withColumn("embedding", expr(
+          s"concat(slice(embedding, ${k + 1}, 64 - $k), slice(embedding, 1, $k))")
+          .cast("array<float>"))
+      case _ => d
+    }
 
-    def shift(df: DataFrame, k: Int, cols: String*): DataFrame =
-      cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(k * KeyShift)))
-
-    val tables: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "region" -> identity,
-      "nation" -> identity,
-      "customer" -> (df => copies(df)(shift(_, _, "c_custkey"))),
-      "supplier" -> (df => copies(df)(shift(_, _, "s_suppkey"))),
-      "part" -> (df => copies(df)(shift(_, _, "p_partkey"))),
-      "orders" -> (df => copies(df)(shift(_, _, "o_orderkey", "o_custkey"))),
-      "lineitem" -> (df => copies(df)(
-        shift(_, _, "l_orderkey", "l_partkey", "l_suppkey"))),
-      "events" -> (df => copies(df)(shift(_, _, "event_id", "user_id"))),
-      "documents" -> (df => copies(df) { (d, k) =>
-        shift(d, k, "doc_id").withColumn("text",
-          if (k == 0) col("text")
-          else translate(col("text"), lower + upper,
-            permAlphabet(lower, k, dupHeavy = false) +
-              permAlphabet(upper, k, dupHeavy = false)))
-      }),
-      "embeddings" -> (df => copies(df) { (d, k) =>
-        val r = k % 64 // dim = 64; copy 0 is the identity rotation
-        shift(d, k, "vec_id").withColumn("embedding",
-          if (r == 0) col("embedding")
-          else expr(s"concat(slice(embedding, ${r + 1}, 64 - $r), slice(embedding, 1, $r))")
-            .cast("array<float>"))
-      }))
-    for ((name, xform) <- tables) {
+    for (name <- Seq("region", "nation") ++ ShiftedKeys.map(_._1)) {
       // events ships TIMESTAMP(NANOS) in some generations: route through
       // Tables loaders so the normalized schema lands in the scratch copy
       val src = name match {
         case "events" => Tables.events(spark, base)
         case _ => Tables.load(spark, base, name)
       }
-      xform(src).write.mode("overwrite").parquet(s"$dest/$name.parquet")
+      val keys = ShiftedKeys.toMap.getOrElse(name, Nil)
+      if (keys.nonEmpty) { // least/greatest need 2+ arguments; 0 is in range
+        val range = src.agg(min(least(keys.map(col) :+ lit(0L): _*)),
+          max(greatest(keys.map(col) :+ lit(0L): _*))).head()
+        require(range.isNullAt(0) || (range.getLong(0) >= 0 && range.getLong(1) < KeyShift),
+          s"inflate refused: $name keys ${keys.mkString(", ")} span " +
+            s"[${range.get(0)}, ${range.get(1)}], outside [0, KeyShift = $KeyShift)")
+      }
+      val out = if (keys.isEmpty) src else (0 until factor).map { k =>
+        keys.foldLeft(recast(name, src, k))((d, c) => d.withColumn(c, col(c) + lit(k * KeyShift)))
+      }.reduce(_ unionAll _)
+      out.write.mode("overwrite").parquet(s"$dest/$name.parquet")
     }
     java.nio.file.Files.createDirectories(marker.getParent)
     java.nio.file.Files.writeString(marker, markerLine)

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
+
+import graft.functions.{BigramSlots, NGramArray}
 
 /** Character n-gram frequency pipeline — the reference's core capability
   * (`/root/reference/mapreduce.erl`), re-expressed as composable,
@@ -23,21 +27,20 @@ import scala.jdk.CollectionConverters._
   *    `mapreduce.erl:283-292`) appears in the output and inflates the
   *    probability denominator (`mapreduce.erl:40-55`, SURVEY.md §2 #7/#12)
   *
-  * Scale notes (100 TB design):
-  *  - Everything is built from codegen'd `org.apache.spark.sql.functions`;
-  *    no UDFs, no driver-side loops. On the docs path the only values that
-  *    reach the driver are scalar aggregates. The word-list entry points
-  *    (`*FromWords`) collect their finished result, which the `[a-z]` gate
-  *    bounds at 26² bigram rows plus the `totalCount` row (≤ 677) whatever
-  *    the input size, so both reference files are written from memory.
-  *  - The grand total for probabilities is joined back as a broadcast
-  *    1-row cross join — NOT an empty-frame window (which would funnel all
-  *    rows through a single partition).
-  *  - n-gram cardinality is bounded (26^n keys for [a-z]-gated grams), so
-  *    the shuffle after partial aggregation carries at most
-  *    `numPartitions × 26^n` rows regardless of input size — the same
-  *    map-side-combine insight as the reference's per-mapper ETS table,
-  *    but supplied by Catalyst automatically.
+  * Two paths. The word-list entry points (`*FromWords`) are ONE fold
+  * stage (FuseME, SIGMOD 2022: no intermediate materialized or shuffled):
+  * each scan task folds its words into a fixed 677-slot array
+  * ([[graft.functions.BigramSlots]], the reference's per-mapper table),
+  * the driver adds one per scan task, and the ≤ 677 finished
+  * rows come back as a local relation — one job, no exchange, no
+  * probability join, both reference files written from memory. The docs
+  * path (`bigramCounts`, `bigramProbabilities`, `onlyOneProbabilities`,
+  * `ngramCounts`) stays a lazy plan for the query surface: [[NGramArray]]
+  * explode → keyed aggregate → broadcast 1-row total (never an
+  * empty-frame window, which funnels all rows through one partition).
+  * Its map-side combine is Catalyst's partial aggregation: the `[a-z]`
+  * gate bounds the keys at 26^n, so the shuffle carries at most
+  * `numPartitions × 26^n` rows, like the reference's per-mapper ETS table.
   */
 object TextPipeline {
 
@@ -69,8 +72,7 @@ object TextPipeline {
     * (the built-in `sequence`+`transform`+`filter`+`rlike` formulation runs
     * the lambda on the interpreted path — measured 10-100× slower with JIT
     * deopt storms; see NGramArray's Scaladoc). */
-  def ngramsCol(word: Column, n: Int): Column =
-    graft.functions.NGramArray(word, n)
+  def ngramsCol(word: Column, n: Int): Column = NGramArray(word, n)
 
   /** Built-in-functions formulation of [[ngramsCol]] — kept as the
     * executable specification for NGramArray's equivalence test. */
@@ -104,10 +106,12 @@ object TextPipeline {
   def withProbability(counts: DataFrame, cntCol: String = "cnt"): DataFrame = {
     val total = counts.agg(sum(col(cntCol)).as("_total"))
     counts.crossJoin(broadcast(total))
-      .withColumn("p",
-        round(col(cntCol).cast("double") / col("_total").cast("double"), 12))
+      .withColumn("p", probability(col(cntCol), col("_total")))
       .drop("_total")
   }
+
+  private def probability(cnt: Column, total: Column): Column =
+    round(cnt.cast("double") / total.cast("double"), 12)
 
   /** Predicate for the `totalCount` side-channel counter
     * (`mapreduce.erl:283-292`): word's final two chars are both [a-z].
@@ -125,25 +129,19 @@ object TextPipeline {
       .agg(count(lit(1)).as("cnt"))
       .select(lit("totalCount").as(keyName), col("cnt"))
 
-  // ---------------------------------------------------------------------
-  // Assembled pipelines (the reference's three entry points, SURVEY.md §3)
-  // ---------------------------------------------------------------------
+  // ---- Assembled pipelines (the reference's entry points, SURVEY.md §3) ----
 
   /** Distributed (`main`) semantics: filtered words → bigram counts,
     * sorted by key (`mapreduce.erl:58-127`). */
   def bigramCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
     freqTable(explodeNgrams(mainFilter(tokenize(docs, textCol)), 2), "bigram")
 
-  /** [[bigramProbabilities]] over an already-tokenized word frame
-    * (column `w`) — the shape [[graft.sources.WordListSource]] yields
-    * for the reference's own newline-delimited `.ngl` corpora, where
-    * there is no text column to tokenize. Same pipeline minus the
-    * tokenize stage; used by the same-data baseline bench row
-    * (`bigram_reference_corpus`). The result is computed here, once, and
-    * returned as a local relation (see [[materialized]]). */
+  /** [[bigramProbabilities]] over a word frame (column `w`, the shape
+    * [[graft.sources.WordListSource]] yields for the reference's `.ngl`
+    * corpora) as one fold stage ([[slotFold]]): the docs path's rows,
+    * doubles and schema. */
   def bigramProbabilitiesFromWords(words: DataFrame): DataFrame =
-    materialized(withProbability(
-      freqTable(explodeNgrams(mainFilter(words), 2), "bigram")))
+    slotFold(words, onlyOne = false)
 
   /** `main` semantics with probabilities — the reference's full output
     * (`results.txt` + `probabilities.txt` as one sorted table). */
@@ -157,38 +155,40 @@ object TextPipeline {
   /** `onlyOne` semantics (`mapreduce.erl:40-55`): no first-letter filter;
     * the `totalCount` row is present in the output AND in the probability
     * denominator (SURVEY.md §2 #7/#12 divergences, kept deliberately). */
-  def onlyOneProbabilities(docs: DataFrame, textCol: String = "text"): DataFrame =
-    onlyOneCore(tokenize(docs, textCol)).orderBy("bigram")
-
-  /** [[onlyOneProbabilities]] over an already-tokenized word frame
-    * (column `w`) — see [[bigramProbabilitiesFromWords]]; materialized
-    * like it. */
-  def onlyOneProbabilitiesFromWords(rawWords: DataFrame): DataFrame =
-    materialized(onlyOneCore(rawWords))
-
-  /** The lazy, unsorted `onlyOne` pipeline over a word frame (column `w`). */
-  private def onlyOneCore(rawWords: DataFrame): DataFrame = {
-    val words = onlyOneFilter(rawWords)
-    // Fuse the totalCount emission into the same explode as the bigrams —
-    // ONE scan of the corpus, exactly like the reference's single ETS table
-    // holding both bigram keys and the totalCount key (`mapreduce.erl:275-292`).
-    val keys = words.select(explode(concat(
-      ngramsCol(col("w"), 2),
+  def onlyOneProbabilities(docs: DataFrame, textCol: String = "text"): DataFrame = {
+    val words = onlyOneFilter(tokenize(docs, textCol))
+    // totalCount rides the bigrams' explode: one scan, like the reference's
+    // single ETS table holding both kinds of key (`mapreduce.erl:275-292`).
+    val keys = words.select(explode(concat(ngramsCol(col("w"), 2),
       when(totalCountPred(col("w")), array(lit("totalCount")))
         .otherwise(array().cast("array<string>")))).as("gram"))
-    withProbability(freqTable(keys, "bigram"))
+    withProbability(freqTable(keys, "bigram")).orderBy("bigram")
   }
 
-  /** Runs `result` once and returns its rows, sorted by `bigram`, as a
-    * local relation — the reference's one `orddict` behind both of its
-    * output files (`mapreduce.erl:96-103`): every later action reads
-    * driver memory instead of re-running the pipeline. Only for results
-    * whose size the key domain bounds, which is also why sorting inside one
-    * partition beats a global sort's range-partitioner sampling job.
-    * Deliberately not `persist`: a CacheManager entry keyed by the plan
-    * would hand a later read of the same path this call's data. */
-  private def materialized(result: DataFrame): DataFrame =
-    result.sparkSession.createDataFrame(
-      result.coalesce(1).sortWithinPartitions("bigram").collect().toSeq.asJava,
-      result.schema)
+  /** [[onlyOneProbabilities]] over an already-tokenized word frame
+    * (column `w`), as one fold stage like [[bigramProbabilitiesFromWords]]. */
+  def onlyOneProbabilitiesFromWords(words: DataFrame): DataFrame =
+    slotFold(words, onlyOne = true)
+
+  /** One job of one stage: each task folds its words into 677 slots and
+    * the driver adds the arrays — the reference's mapper tables merged into
+    * its one `orddict` (`mapreduce.erl:96-103`). Returns the non-zero slots
+    * in Spark's string order (`totalCount` between `to` and `tp`) as a
+    * local relation, `p` by the docs path's expression over the literal
+    * total. Not `persist`: a CacheManager entry keyed by the plan would
+    * hand a later read of the same path this call's data. */
+  private def slotFold(words: DataFrame, onlyOne: Boolean): DataFrame = {
+    val slots = words.select("w").queryExecution.toRdd
+      .aggregate(new Array[Long](BigramSlots.Slots))((acc, row) =>
+        if (row.isNullAt(0)) acc else BigramSlots.fold(row.getUTF8String(0), onlyOne, acc),
+        BigramSlots.add)
+    val rows = slots.indices.filter(slots(_) > 0)
+      .map(s => Row(BigramSlots.key(s), slots(s)))
+      .sortBy(r => UTF8String.fromString(r.getString(0)))
+    // the docs path's nullability: onlyOne's keys pass a nullable `array<string>`
+    val schema = StructType(Seq(StructField("bigram", StringType, nullable = onlyOne),
+      StructField("cnt", LongType, nullable = false)))
+    words.sparkSession.createDataFrame(rows.asJava, schema)
+      .withColumn("p", probability(col("cnt"), lit(slots.sum)))
+  }
 }

@@ -68,7 +68,14 @@ object ReferenceSink {
     * fan-out, every partition is written in parallel by whichever tasks
     * hold the data, and a downstream scan filtered on `first_letter`
     * prunes to one directory (the reference's "mapper per letter file"
-    * becomes partition pruning). */
+    * becomes partition pruning).
+    *
+    * Files: each scan task writes one part file per first letter it holds,
+    * so a request writes up to letters × scan tasks — 104 (26 × 4) on the
+    * benchmark's 354,984-line word list at `local[4]`. Kept over one file
+    * per letter: on that list at `local[4]` (median of 9) this write took
+    * 290 ms, a `repartition(first_letter)` first 341 ms (it shuffles every
+    * word) and an unpartitioned write 154 ms. */
   def writeSplitPhase(words: DataFrame, path: String): Unit =
     graft.operators.TextPipeline.mainFilter(words)
       .select(col("w").as("value"),

@@ -30,6 +30,10 @@ class ScalingInflateSpec extends AnyFunSuite {
         val df = Tables.load(spark, dest.toString, t)
         assert(df.select(key).distinct().count() === df.count(), s"$t.$key")
       }
+      for ((t, keys) <- Scaling.ShiftedKeys; k <- keys) {
+        val top = Tables.load(spark, dest.toString, t).agg(max(col(k))).head()
+        assert(top.getAs[Number](0).longValue < (1L << 32), s"$t.$k: shifted key past 2^32")
+      }
       val upper = lower.toUpperCase
       val expected = Tables.load(spark, base, "documents").select(
         (col("doc_id") + lit(Scaling.KeyShift)).as("doc_id"),

@@ -8,16 +8,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** What a block of driver code makes Spark do: the jobs it starts and the
-  * input records its tasks read. Only work submitted from the calling
-  * thread counts — the block runs under a fresh job group, which SQL
-  * executions and their AQE stage jobs inherit — so jobs of other threads
-  * sharing the session never leak in. A marker job closes the block: the
+/** What a block of driver code makes Spark do: the jobs it starts, the
+  * stages those jobs hold and the input records their tasks read. Only
+  * work submitted from the calling thread counts — the block runs under a
+  * fresh job group, which SQL executions and their AQE stage jobs inherit —
+  * so jobs of other threads sharing the session never leak in. A marker job closes the block: the
   * listener bus delivers events in order, so once the marker's end
   * arrives, every event of the block has been seen. */
 object SparkProbe {
 
-  final case class Usage(jobs: Int, recordsRead: Long)
+  final case class Usage(jobs: Int, stages: Int, recordsRead: Long)
 
   def measure[T](spark: SparkSession)(body: => T): (T, Usage) = {
     val sc = spark.sparkContext
@@ -54,7 +54,7 @@ object SparkProbe {
         sc.clearJobGroup()
       }
       assert(closed.await(60, TimeUnit.SECONDS), "listener never saw the marker job end")
-      (result, Usage(jobs.get, records.get))
+      (result, Usage(jobs.get, stages.size, records.get))
     } finally sc.removeSparkListener(listener)
   }
 }

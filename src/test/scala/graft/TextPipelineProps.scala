@@ -11,7 +11,9 @@ import graft.operators.TextPipeline
   *      specification (the §2 #5 equivalence argument, executed);
   *  (b) probabilities sum to 1 ± ε whenever any bigram survives;
   *  (c) counts are invariant under input permutation (what justifies
-  *      dropping the reference's list-reversal quirk, §2 #2).
+  *      dropping the reference's list-reversal quirk, §2 #2);
+  * plus (d): the word-list fold stage (`*FromWords`) returns the docs
+  * path's rows, `p` included, for both `main` and `onlyOne`.
   * Runs on the sbt ScalaCheck test framework (no scalatest bridge). */
 object TextPipelineProps extends Properties("TextPipeline") {
 
@@ -27,6 +29,18 @@ object TextPipelineProps extends Properties("TextPipeline") {
     Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, wordChar)).map(_.mkString)
   private val corpus: Gen[List[String]] =
     Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, word))
+
+  // fold-vs-docs words: [a-z] plus digits, apostrophe, CR and the
+  // multibyte é ß 中, so first characters and final pairs vary; 0-1-char
+  // words included; no spaces, which the docs path splits on
+  private val foldChar: Gen[Char] =
+    Gen.frequency(8 -> Gen.choose('a', 'z'),
+      1 -> Gen.oneOf('0', '7', '\'', '\r', 'é', 'ß', '中'))
+  private val foldWord: Gen[String] =
+    Gen.frequency(1 -> Gen.chooseNum(0, 1), 4 -> Gen.chooseNum(2, 9))
+      .flatMap(n => Gen.listOfN(n, foldChar)).map(_.mkString)
+  private val foldCorpus: Gen[List[String]] =
+    Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n, foldWord))
 
   /** The executable specification: all length-n windows whose chars are
     * all in [a-z]. */
@@ -62,5 +76,14 @@ object TextPipelineProps extends Properties("TextPipeline") {
         Seq(ws.reverse.mkString(" ")).toDF("text"))
         .as[(String, Long)].collect().toMap
       a == b
+    }
+
+  property("*FromWords fold == docs path, row for row, p included") =
+    Prop.forAll(foldCorpus) { ws =>
+      val (words, text) = (ws.toDF("w"), ws.toDF("text"))
+      TextPipeline.bigramProbabilitiesFromWords(words).collect().toSeq ==
+        TextPipeline.bigramProbabilities(text).collect().toSeq &&
+      TextPipeline.onlyOneProbabilitiesFromWords(words).collect().toSeq ==
+        TextPipeline.onlyOneProbabilities(text).collect().toSeq
     }
 }

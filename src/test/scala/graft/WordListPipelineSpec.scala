@@ -108,6 +108,17 @@ class WordListPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TextPipeline.onlyOneProbabilitiesFromWords(words).collect().toSeq === docsPath)
   }
 
+  test("each *FromWords request is one job of one stage over the 24 input " +
+      "records, with its docs-path twin's schema") {
+    for ((fromWords, docsPath) <- Seq[(DataFrame => DataFrame, DataFrame => DataFrame)](
+        (TextPipeline.bigramProbabilitiesFromWords, TextPipeline.bigramProbabilities(_)),
+        (TextPipeline.onlyOneProbabilitiesFromWords, TextPipeline.onlyOneProbabilities(_)))) {
+      val (r, usage) = SparkProbe.measure(spark)(fromWords(words))
+      assert((usage.jobs, usage.stages, usage.recordsRead) === ((1, 1, FixtureLines.toLong)))
+      assert(r.schema === docsPath(words.toDF("text")).schema)
+    }
+  }
+
   test("the sink writes a lazy aggregate's counts byte-exact too") {
     val dir = outDir()
     val lazyCounts = TextPipeline.freqTable(
